@@ -143,7 +143,7 @@ object Bench {
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")
       // Shuffle codec: the SCALING children run zstd (callers pass it) — a
-      // 3-window interleaved CascProbe A/B measured zstd halving the
+      // 3-window interleaved cascade A/B (BENCH.md) measured zstd halving the
       // shuffle volume (1334 -> 732 MB) for ~6% lo-wall CPU cost, and in
       // the two squall windows (tmpfs write-rate collapse, this box's
       // dominant weather) the halved byte volume halved the hi child's

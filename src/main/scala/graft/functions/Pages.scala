@@ -1,34 +1,13 @@
 package graft.functions
 
 import graft.compress.GorillaCodec
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Compressed (series, bucket) pages: delta-of-delta + Gorilla XOR bits packed
   * into a BinaryType column (north_rule; SURVEY.md §2.9 / §7.3).
-  *
-  * The aggregation itself stays built-in (`collect_list` gets partial
-  * aggregation; `sort_array` canonicalizes point order to (ts, seq, value)),
-  * and only the per-group bit-packing is a scalar UDF over the collected
-  * arrays. Page size is bounded by points-per-(series,bucket), which the
-  * bucketing keeps small by construction.
   */
 object Pages {
-
-  private val encodeUdf = udf { (ts: Seq[Long], vs: Seq[Double]) =>
-    GorillaCodec.encode(ts.toArray, vs.toArray)
-  }
-
-  private val decodeCheckUdf = udf { (page: Array[Byte], ts: Seq[Long], vs: Seq[Double]) =>
-    val decoded: (Array[Long], Array[Double]) = GorillaCodec.decode(page)
-    val tsArr: Array[Long] = ts.toArray
-    decoded._1.sameElements(tsArr) && decoded._2.length == vs.length &&
-      vs.indices.forall(i => java.lang.Double.doubleToRawLongBits(decoded._2(i)) ==
-        java.lang.Double.doubleToRawLongBits(vs(i)))
-  }
-
-  def encodePage(ts: Column, vs: Column): Column = encodeUdf(ts, vs)
-  def roundtripOk(page: Column, ts: Column, vs: Column): Column = decodeCheckUdf(page, ts, vs)
 
   final case class PageRow(series: String, bucket: Long, n_points: Int,
       page: Array[Byte], roundtrip_ok: Boolean)
@@ -41,27 +20,15 @@ object Pages {
     * collect_list formulation materialized every group as an array struct
     * (~16M rows at bench scale), which was GC-bound and did not scale with
     * cores (measured 11.1s→9.9s from local[8]→local[32]; this path scales).
-    *
-    * `preArranged = true` skips the repartition+sort: the CALLER guarantees
-    * the input is already partitioned so that all rows of a series share one
-    * partition and sorted by (series, ts, seq) within partitions (the
-    * co-partitioned cascade's shared exchange — TierCascade scaladoc). The
-    * bucket is a monotone function of ts, so within a series the (ts, seq)
-    * order is exactly the (bucket, ts, seq) order and consecutive-key
-    * grouping and page bit-streams are BIT-IDENTICAL to the self-arranged
-    * form (spec-asserted, RollupSpec "co-partitioned cascade").
     */
-  def pagesFromObs(obs: DataFrame, bucketSec: Long,
-      preArranged: Boolean = false): DataFrame = {
+  def pagesFromObs(obs: DataFrame, bucketSec: Long): DataFrame = {
     val spark = obs.sparkSession
     import spark.implicits._
-    val withBucket = obs.select(col("series"),
-      (floor(col("ts") / bucketSec) * bucketSec).cast("long").as("bucket"),
-      col("ts"), col("seq"), col("value"))
-    val parted = (if (preArranged) withBucket
-      else withBucket
-        .repartition(col("series"), col("bucket"))
-        .sortWithinPartitions("series", "bucket", "ts", "seq"))
+    val parted = obs.select(col("series"),
+        (floor(col("ts") / bucketSec) * bucketSec).cast("long").as("bucket"),
+        col("ts"), col("seq"), col("value"))
+      .repartition(col("series"), col("bucket"))
+      .sortWithinPartitions("series", "bucket", "ts", "seq")
       .as[(String, Long, Long, Long, Double)]
     parted.mapPartitions { it =>
       new Iterator[PageRow] {
@@ -90,13 +57,6 @@ object Pages {
       }
     }.toDF()
   }
-
-  /** Pages with raw byte size vs uncompressed size, for compression metrics. */
-  def pageStats(pages: DataFrame): DataFrame =
-    pages.select(col("series"), col("bucket"), col("n_points"),
-      length(col("page")).as("page_bytes"),
-      (col("n_points") * 16L).as("raw_bytes"),
-      col("roundtrip_ok"))
 
   final case class PageCensusRow(n_dec: Int, ts_lo: Long, ts_hi: Long, sum_v: Double)
 

@@ -28,8 +28,6 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
   private val manifestDir = s"$basePath/$tier/_manifests"
   private def fs: FileSystem = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def dataPath: String = dataDir
-
   /** Driver-side parallel map over partition-granular FS work (rename /
     * footer read / manifest write). The round-1 serial loop was fine at 10²
     * partitions and a commit-latency wall at 10⁵ — commit cost must stay
@@ -90,41 +88,29 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
     }
     fs.delete(new Path(staging), true)
 
-    // per-partition row counts straight from parquet footers on the driver —
-    // a Spark job here would add a whole scheduling round-trip per append
-    // (measured ~1s each; 7 appends per cascade made it the scaling floor);
-    // footer reads are I/O-bound and run on the parallel pool
-    val counts: Map[String, Long] = parMap(todo) { p =>
-      val d = new Path(s"$dataDir/$partCol=$p")
-      val rows = fs.listStatus(d).iterator
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(f.getPath, spark.sparkContext.hadoopConfiguration)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
-      p -> rows
-    }.toMap
-
+    // per-partition manifest: file census and row counts straight from the
+    // parquet footers on the driver — a Spark job here would add a whole
+    // scheduling round-trip per append (measured ~1s each; 7 appends per
+    // cascade made it the scaling floor); footer reads are I/O-bound and run
+    // on the parallel pool
     parMap(todo) { p =>
-      val stats = {
-        val d = new Path(s"$dataDir/$partCol=$p")
-        if (fs.exists(d))
-          fs.listStatus(d).iterator
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map(s => s.getPath.getName -> s.getLen).toSeq.sortBy(_._1)
-        else Seq.empty
-      }
+      val files = fs.listStatus(new Path(s"$dataDir/$partCol=$p"))
+        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName).toSeq
+      val rows = files.map { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(f.getPath, spark.sparkContext.hadoopConfiguration)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getRecordCount finally r.close()
+      }.sum
       // per-append METRICS committed beside the data (the internal_metrics /
       // selfstat analog, /root/reference/src/sources/internal_metrics.rs):
       // rows, bytes, file census and append wall time, queryable via
       // internalMetrics()
       val wallMs = (System.nanoTime() - appendStart) / 1000000L
       val manifest =
-        s"""{"table":"$tier","partition":"$partCol=$p","rows":${counts.getOrElse(p, 0L)},
-           |"bytes":${stats.map(_._2).sum},"n_files":${stats.size},"wall_ms":$wallMs,
-           |"files":[${stats.map(f => "\"" + f._1 + "\"").mkString(",")}],
+        s"""{"table":"$tier","partition":"$partCol=$p","rows":$rows,
+           |"bytes":${files.map(_.getLen).sum},"n_files":${files.size},"wall_ms":$wallMs,
+           |"files":[${files.map(f => "\"" + f.getPath.getName + "\"").mkString(",")}],
            |"lineage":"${lineage.replace("\"", "'")}",
            |"committed_at":"${java.time.Instant.now()}"}""".stripMargin.replace("\n", "")
       commitManifest(p, manifest)
@@ -187,8 +173,6 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
       spark.read.option("basePath", dataDir)
         .parquet(committed.map(p => s"$dataDir/$partCol=$p"): _*)
   }
-
-  def readRaw(): DataFrame = spark.read.parquet(dataDir)
 
   /** Retention: drop partitions for which `expired` holds. Partition-predicate
     * delete + manifest removal; returns dropped partition values.

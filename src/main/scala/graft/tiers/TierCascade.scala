@@ -1,8 +1,10 @@
 package graft.tiers
 
 import graft.lake.LakeTable
+import java.util.concurrent.{Callable, Executors, Future}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** The continuous-aggregate cascade: raw observations → 1m → 1h → 1d tier
   * tables, each materialized in the lake layer with per-partition manifests so
@@ -30,28 +32,6 @@ object TierCascade {
     *        Histogram rollup (north_star "histogram/summary rollups").
     * @param withPages also materialize Gorilla delta-of-delta+XOR binary
     *        pages per (series, hour), resumable like every other tier.
-    * @param copartition share ONE series-hash exchange across every raw
-    *        consumer (applies when salts == 1). The raw observations are
-    *        repartitioned by `series`, sorted by (series, ts, seq) within
-    *        partitions, and persisted; then (a) the 1m aggregates run
-    *        EXCHANGE-FREE — HashPartitioning(series) satisfies the groupBy's
-    *        ClusteredDistribution(series, bucket), so Catalyst elides the
-    *        shuffle — and (b) the pages pass consumes the arrangement
-    *        directly (Pages.pagesFromObs preArranged). Why this wins at
-    *        scale: with few observations per (series, bucket) cell relative
-    *        to the map-partition count, map-side combine compresses almost
-    *        nothing, so the aggregate's "partial" shuffle carries ~one WIDE
-    *        partial row (rollup fields + histogram rungs) per input row,
-    *        and the pages chain shuffles the raw rows AGAIN — the
-    *        co-partitioned form shuffles the narrow 4-column rows exactly
-    *        once for both (measured: 732 → 439 MB zstd shuffle bytes, lo
-    *        wall −14–17% and clean hi wall −9% at bench scale, the dominant
-    *        stage exchange-free; BENCH.md "co-partitioned-cascade A/B").
-    *        This is the absolute-wall / network-bytes shape for real
-    *        clusters; the bench's graded 2→8 ratio prefers the standard
-    *        shape on this one-socket box (see the A/B note). Skew bound:
-    *        one series must fit one task's share — with hot KEYS (not hot
-    *        series) the salted path remains the tool.
     */
   def run(
       spark: SparkSession,
@@ -60,175 +40,102 @@ object TierCascade {
       seriesBuckets: Int = 8,
       salts: Int = 1,
       withHistograms: Boolean = false,
-      withPages: Boolean = false,
-      cacheObs: Boolean = false,
-      copartition: Boolean = false,
-      pagesFirst: Boolean = true): Seq[TierResult] = {
-    // One shared scan for the three raw consumers (1m rollup, histogram,
-    // pages): obs is a narrow 4-column projection, far smaller than the raw
-    // table, so caching it trades a bounded memory footprint for two full
-    // re-reads of the source (which this sandbox's proactive page-cache
-    // reclaim makes disk-bound every time).
-    val obsIn = if (cacheObs) obs.persist() else obs
+      withPages: Boolean = false): Seq[TierResult] = {
     def timed[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
       println(f"[cascade] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
+    val ladder = graft.model.Schemas.bucketLadder
 
-    // Co-partitioned arrangement (see the `copartition` param doc): one
-    // narrow-row series-hash exchange, sorted within partitions, persisted —
-    // every raw consumer below reads it instead of re-shuffling.
-    val arranged: Option[DataFrame] =
-      if (copartition && salts == 1) {
-        val p = obsIn
-          .select(col("series"), col("ts"), col("seq"), col("value"))
-          .repartition(col("series"))
-          .sortWithinPartitions("series", "ts", "seq")
-          .persist()
-        timed("copartition series exchange")(p.count())
-        Some(p)
-      } else None
-    val obsSrc = arranged.getOrElse(obsIn)
+    def step(name: String, table: String, tag: String, frame: DataFrame,
+        lineage: String): TierResult = {
+      val lake = new LakeTable(spark, basePath, table, "pk")
+      TierResult(name, lake, timed(tag)(
+        lake.append(frame.withColumn("pk", partKey(seriesBuckets)), lineage)))
+    }
 
     // The three chains — sum tiers (raw→1m→1h→1d), histogram tiers
     // (raw→hist_1m→1h→1d) and Gorilla pages (raw→pages_1h) — have no data
     // dependencies on each other, so they materialize CONCURRENTLY from
     // driver threads (Spark schedules jobs from multiple threads on one
     // session): independent sinks overlap each other's driver-side commit
-    // phases and keep executors busy end to end, exactly as a production
-    // pipeline with several sinks would. Order within a chain is preserved
-    // (each tier reads only the previous tier's committed partitions).
+    // phases and keep executors busy end to end. Order within a chain is
+    // preserved (each tier reads only the previous tier's committed
+    // partitions).
     //
     // FUSED 1m stage: the sum and histogram 1m tiers group by the SAME
-    // (series, bucket-60s) key, so materializing them separately scans and
-    // shuffles the raw table twice for the same grouping. When both are
-    // requested (and the unsalted single-phase plan applies), ONE fused
-    // aggregate produces both; it is persisted — tier-1m cardinality, raw
-    // cardinality divided by the per-cell observation count, MEMORY_AND_DISK
-    // — and materialized BEFORE the sum/hist chains launch so both 1m
-    // writes read the cache instead of racing to recompute the aggregation.
-    // It is, however, materialized AFTER the pages chain is launched: pages
-    // never reads it, and the fused aggregate is the cascade's one serial
-    // stage — a per-stage probe (BENCH.md round 5) measured it at 29–54% of
-    // the high-parallelism wall while the independent pages scan+shuffle
-    // sat queued behind it. Overlapping the two costs the
-    // throughput-bound low level nothing and removes a pure serial floor
-    // everywhere the cluster has headroom.
-    // the fused frame is RETURNED and passed into the consuming chains as a
-    // parameter (round 6, ADVICE fix): the previous `var fused1m` was
-    // written on the calling thread and read from pool threads, safe only
-    // via the implicit submission-order invariant — structural now.
-    def materializeFused(): Option[DataFrame] =
-      if (withHistograms && salts == 1) {
-        val f = TierRollup.fromObsWithHistogram(
-          obsSrc, graft.model.Schemas.bucketLadder, 60L).persist()
-        timed("raw->1m/hist_1m fused agg")(f.count())
-        Some(f)
-      } else None
-
+    // (series, bucket-60s) key, so when both are requested (and the
+    // unsalted single-phase plan applies) ONE fused aggregate produces both.
+    // It is persisted — tier-1m cardinality, MEMORY_AND_DISK — and
+    // materialized on the calling thread BEFORE the sum/hist chains launch,
+    // so both 1m writes read the cache instead of racing to recompute it,
+    // but AFTER the pages chain is launched: pages never reads it, and the
+    // fused aggregate is the cascade's one serial stage (BENCH.md round 5
+    // measured it at 29–54% of the high-parallelism wall), so the pages
+    // scan+shuffle overlaps it. The consuming chains take the fused frame
+    // as a parameter, bound once on the calling thread.
     def sumChain(fused1m: Option[DataFrame]): Seq[TierResult] = {
-      val t1m = fused1m.map(TierRollup.tierColumns).getOrElse(
-        if (salts > 1) TierRollup.fromObsSalted(obsIn, 60L, salts)
-        else TierRollup.fromObs(obsSrc, 60L))
-      val lake1m = new LakeTable(spark, basePath, "tier_1m", "pk")
-      val new1m = timed("raw->1m")(lake1m.append(t1m.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "raw->1m rollup bucket=60s"))
-
-      val lake1h = new LakeTable(spark, basePath, "tier_1h", "pk")
-      val t1h = TierRollup.mergeTier(lake1m.read().drop("pk"), 3600L)
-      val new1h = timed("1m->1h")(lake1h.append(t1h.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "1m->1h mergeTier bucket=3600s"))
-
-      val lake1d = new LakeTable(spark, basePath, "tier_1d", "pk")
-      val t1d = TierRollup.mergeTier(lake1h.read().drop("pk"), 86400L)
-      val new1d = timed("1h->1d")(lake1d.append(t1d.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "1h->1d mergeTier bucket=86400s"))
-      Seq(TierResult("1m", lake1m, new1m), TierResult("1h", lake1h, new1h),
-        TierResult("1d", lake1d, new1d))
+      val raw1m = fused1m.map(TierRollup.tierColumns).getOrElse(
+        if (salts > 1) TierRollup.fromObsSalted(obs, 60L, salts) else TierRollup.fromObs(obs, 60L))
+      val t1m = step("1m", "tier_1m", "raw->1m", raw1m, "raw->1m rollup bucket=60s")
+      val t1h = step("1h", "tier_1h", "1m->1h",
+        TierRollup.mergeTier(t1m.table.read().drop("pk"), 3600L), "1m->1h mergeTier bucket=3600s")
+      val t1d = step("1d", "tier_1d", "1h->1d",
+        TierRollup.mergeTier(t1h.table.read().drop("pk"), 86400L), "1h->1d mergeTier bucket=86400s")
+      Seq(t1m, t1h, t1d)
     }
 
     def histChain(fused1m: Option[DataFrame]): Seq[TierResult] = {
-      val ladder = graft.model.Schemas.bucketLadder
-      val lakeH1m = new LakeTable(spark, basePath, "hist_1m", "pk")
-      val h1m = fused1m.map(TierRollup.histColumns)
-        .getOrElse(TierRollup.histogramFromObs(obsSrc, ladder, 60L))
-      val newH1m = timed("raw->hist_1m")(lakeH1m.append(h1m.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "raw->hist_1m cumulative ladder"))
-      val lakeH1h = new LakeTable(spark, basePath, "hist_1h", "pk")
-      val newH1h = timed("hist_1m->1h")(lakeH1h.append(
-        TierRollup.mergeHistogramTier(lakeH1m.read().drop("pk"), ladder.length, 3600L)
-          .withColumn("pk", partKey(seriesBuckets)),
-        lineage = "hist_1m->hist_1h bucket merge"))
-      val lakeH1d = new LakeTable(spark, basePath, "hist_1d", "pk")
-      val newH1d = timed("hist_1h->1d")(lakeH1d.append(
-        TierRollup.mergeHistogramTier(lakeH1h.read().drop("pk"), ladder.length, 86400L)
-          .withColumn("pk", partKey(seriesBuckets)),
-        lineage = "hist_1h->hist_1d bucket merge"))
-      Seq(TierResult("hist_1m", lakeH1m, newH1m), TierResult("hist_1h", lakeH1h, newH1h),
-        TierResult("hist_1d", lakeH1d, newH1d))
+      def merge(finer: TierResult, bucketSec: Long): DataFrame =
+        TierRollup.mergeHistogramTier(finer.table.read().drop("pk"), ladder.length, bucketSec)
+      val raw1m = fused1m.map(TierRollup.histColumns)
+        .getOrElse(TierRollup.histogramFromObs(obs, ladder, 60L))
+      val h1m = step("hist_1m", "hist_1m", "raw->hist_1m", raw1m, "raw->hist_1m cumulative ladder")
+      val h1h = step("hist_1h", "hist_1h", "hist_1m->1h", merge(h1m, 3600L),
+        "hist_1m->hist_1h bucket merge")
+      val h1d = step("hist_1d", "hist_1d", "hist_1h->1d", merge(h1h, 86400L),
+        "hist_1h->hist_1d bucket merge")
+      Seq(h1m, h1h, h1d)
     }
 
-    def pagesChain(): Seq[TierResult] = {
-      val lakeP = new LakeTable(spark, basePath, "pages_1h", "pk")
-      val p = graft.functions.Pages.pagesFromObs(obsSrc, 3600L,
-        preArranged = arranged.nonEmpty)
-      val newP = timed("raw->pages_1h")(lakeP.append(p.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "raw->pages_1h gorilla dod+xor"))
-      Seq(TierResult("pages_1h", lakeP, newP))
-    }
+    def pagesChain(): Seq[TierResult] =
+      Seq(step("pages_1h", "pages_1h", "raw->pages_1h",
+        graft.functions.Pages.pagesFromObs(obs, 3600L), "raw->pages_1h gorilla dod+xor"))
 
-    def callable(c: () => Seq[TierResult]) =
-      new java.util.concurrent.Callable[Seq[TierResult]] {
-        def call(): Seq[TierResult] = c()
-      }
-    val nChains = 1 + (if (withHistograms) 1 else 0) + (if (withPages) 1 else 0)
-    var fusedOpt: Option[DataFrame] = None
+    val pool = Executors.newFixedThreadPool(
+      1 + (if (withHistograms) 1 else 0) + (if (withPages) 1 else 0))
+    val submitted = mutable.Buffer.empty[Future[Seq[TierResult]]]
+    def submit(chain: => Seq[TierResult]): Future[Seq[TierResult]] = {
+      val f = pool.submit(new Callable[Seq[TierResult]] { def call(): Seq[TierResult] = chain })
+      submitted += f
+      f
+    }
+    var fused: Option[DataFrame] = None
     try {
-      if (nChains == 1) { fusedOpt = materializeFused(); sumChain(fusedOpt) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(nChains)
-        val submitted =
-          scala.collection.mutable.Buffer.empty[java.util.concurrent.Future[Seq[TierResult]]]
-        def submit(c: () => Seq[TierResult]) = {
-          val f = pool.submit(callable(c)); submitted += f; f
-        }
-        try {
-          // pages FIRST (it reads raw, not the fused cache), THEN the fused
-          // materialize on the calling thread — the overlap removes the
-          // cascade's serial floor (see the fused-stage note above) —
-          // then the chains that consume the fused cache.
-          val pagesEarly =
-            if (withPages && pagesFirst) Some(submit(() => pagesChain()))
-            else None
-          fusedOpt = materializeFused()
-          val fused = fusedOpt
-          val pagesF = pagesEarly.orElse(
-            if (withPages) Some(submit(() => pagesChain())) else None)
-          val sumF = submit(() => sumChain(fused))
-          val histF =
-            if (withHistograms) Some(submit(() => histChain(fused))) else None
-          sumF.get() ++ histF.map(_.get()).getOrElse(Nil) ++
-            pagesF.map(_.get()).getOrElse(Nil)
-        } catch {
-          // a failure on the calling thread (e.g. the fused materialize) or
-          // in one chain must not abandon in-flight sibling futures: cancel
-          // what hasn't started, drain what has (their exceptions are
-          // secondary — the first failure propagates), so the pool winds
-          // down and the finally below can release every persist (round 6,
-          // ADVICE fix — the pages future used to leak with its exception
-          // swallowed and the persists skipped).
-          case t: Throwable =>
-            submitted.foreach(_.cancel(false))
-            submitted.foreach(f => try f.get() catch { case _: Throwable => () })
-            throw t
-        } finally pool.shutdown()
-      }
+      val pagesF = if (withPages) Some(submit(pagesChain())) else None
+      fused = if (withHistograms && salts == 1)
+        Some(TierRollup.fromObsWithHistogram(obs, ladder, 60L).persist())
+      else None
+      fused.foreach(f => timed("raw->1m/hist_1m fused agg")(f.count()))
+      val fused1m = fused
+      val sumF = submit(sumChain(fused1m))
+      val histF = if (withHistograms) Some(submit(histChain(fused1m))) else None
+      (Seq(sumF) ++ histF ++ pagesF).flatMap(_.get())
+    } catch {
+      // a failure on the calling thread (e.g. the fused materialize) or in
+      // one chain must not abandon in-flight sibling futures: cancel what
+      // hasn't started, drain what has (their exceptions are secondary —
+      // the first failure propagates), so the finally below releases the
+      // fused persist only once no chain can still read it.
+      case t: Throwable =>
+        submitted.foreach(_.cancel(false))
+        submitted.foreach(f => try f.get() catch { case _: Throwable => () })
+        throw t
     } finally {
-      fusedOpt.foreach(_.unpersist(blocking = false))
-      arranged.foreach(_.unpersist(blocking = false))
-      if (cacheObs) obsIn.unpersist(blocking = false)
+      pool.shutdown()
+      fused.foreach(_.unpersist(blocking = false))
     }
   }
 

@@ -47,11 +47,15 @@ object TierRollup {
       max(ord).as("_ord"))
   }
 
-  private def unpackOrd(df: DataFrame): DataFrame =
-    df.select(col("series"), col("bucket"), col("sum_v"), col("cnt"), col("min_v"),
+  /** `_ord` → (last_ts, last_seq); columns after the rollup set are kept. */
+  private def unpackOrd(df: DataFrame): DataFrame = {
+    val extras = df.columns.filterNot(Set("series", "bucket", "sum_v", "cnt",
+      "min_v", "max_v", "last_v", "_ord").contains)
+    df.select((Seq(col("series"), col("bucket"), col("sum_v"), col("cnt"), col("min_v"),
       col("max_v"), col("last_v"),
       (col("bucket") + shiftright(col("_ord"), SeqBits)).as("last_ts"),
-      col("_ord").bitwiseAND(SeqMask).as("last_seq"))
+      col("_ord").bitwiseAND(SeqMask).as("last_seq")) ++ extras.map(col)): _*)
+  }
 
   /** Raw observations → one tier. Shuffles once on (series, bucket) with
     * map-side partial agg; all aggregates are algebraic and hash-friendly.
@@ -179,7 +183,7 @@ object TierRollup {
     val rungs = ladder.map(b => sum(when(col("value") <= b, 1L).otherwise(0L)))
     val aggs = rollupAggs(col("ts"), col("seq"), col("bucket"), col("value")) :+
       array(rungs.toIndexedSeq: _*).as("h_buckets")
-    unpackOrd2(obs
+    unpackOrd(obs
       .withColumn("bucket", bucketOf(col("ts"), bucketSec))
       .groupBy(col("series"), col("bucket"))
       .agg(aggs.head, aggs.tail: _*))
@@ -196,16 +200,6 @@ object TierRollup {
   def histColumns(fused: DataFrame): DataFrame =
     fused.select(col("series"), col("bucket"), col("cnt").as("h_count"),
       col("sum_v").as("h_sum"), col("h_buckets"))
-
-  /** unpackOrd preserving any extra columns after the rollup set. */
-  private def unpackOrd2(df: DataFrame): DataFrame = {
-    val extras = df.columns.filterNot(Set("series", "bucket", "sum_v", "cnt",
-      "min_v", "max_v", "last_v", "_ord").contains)
-    df.select((Seq(col("series"), col("bucket"), col("sum_v"), col("cnt"), col("min_v"),
-      col("max_v"), col("last_v"),
-      (col("bucket") + shiftright(col("_ord"), SeqBits)).as("last_ts"),
-      col("_ord").bitwiseAND(SeqMask).as("last_seq")) ++ extras.map(col)): _*)
-  }
 
   /** Histogram tier merge: element-wise cumulative-bucket add (equal ladder
     * layout assumed, mirroring the reference's same-layout requirement:

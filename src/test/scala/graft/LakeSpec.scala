@@ -54,6 +54,26 @@ class LakeSpec extends AnyFunSuite {
     assert(again.map(r => r.name -> r.table.read().count()).toMap == counts)
   }
 
+  test("a failing chain: cascade rethrows, releases its persists, clean rerun commits all 7") {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    def cascade(base: String) = TierCascade.run(spark, obs(5000), base, seriesBuckets = 4,
+      salts = 1, withHistograms = true, withPages = true)
+    // a regular file where the pages chain's table directory should be: only
+    // that chain fails, while the sum and histogram chains (and the fused 1m
+    // persist they read) run to completion
+    val broken = tmpDir()
+    Files.write(java.nio.file.Paths.get(broken, "pages_1h"), "not a directory".getBytes)
+    intercept[java.util.concurrent.ExecutionException](cascade(broken))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"persists left behind: ${spark.sparkContext.getPersistentRDDs.keys}")
+    val results = cascade(tmpDir())
+    assert(results.map(_.name) ==
+      Seq("1m", "1h", "1d", "hist_1m", "hist_1h", "hist_1d", "pages_1h"))
+    assert(results.forall(_.newPartitions.nonEmpty))
+  }
+
   test("1000-partition append commits in seconds; resume and read stay exact") {
     import spark.implicits._
     val base = tmpDir()

@@ -1,5 +1,6 @@
 package graft
 
+import graft.compress.GorillaCodec
 import graft.model.{RollupPoint, Schemas}
 import graft.ref.RefRollup
 import graft.sources.TokenFixture
@@ -33,8 +34,17 @@ class RollupSpec extends AnyFunSuite {
       (p.series, p.bucket) -> p
     }.toMap
 
-  private def oracleObs(n: Long): Seq[(String, Long, Long, Double)] = {
-    val rows = obsDf(n).collect()
+  private def collectHist(df: DataFrame): Map[(String, Long), (Long, Double, List[Long])] =
+    df.collect().map { r =>
+      (r.getAs[String]("series"), r.getAs[Long]("bucket")) ->
+        ((r.getAs[Long]("h_count"), r.getAs[Double]("h_sum"),
+          r.getAs[Seq[Long]]("h_buckets").toList))
+    }.toMap
+
+  private def oracleObs(n: Long): Seq[(String, Long, Long, Double)] = oracleObs(obsDf(n))
+
+  private def oracleObs(obs: DataFrame): Seq[(String, Long, Long, Double)] = {
+    val rows = obs.collect()
     rows.map(r => (r.getAs[String]("series"), r.getAs[Long]("ts"),
       r.getAs[Long]("seq"), r.getAs[Double]("value"))).toSeq
   }
@@ -101,14 +111,9 @@ class RollupSpec extends AnyFunSuite {
     val fused = TierRollup.fromObsWithHistogram(obs, ladder, 60L)
     assert(collectTier(TierRollup.tierColumns(fused)) ==
       collectTier(TierRollup.fromObs(obs, 60L)))
-    def histMap(df: DataFrame) = df.collect().map { r =>
-      (r.getAs[String]("series"), r.getAs[Long]("bucket")) ->
-        ((r.getAs[Long]("h_count"), r.getAs[Double]("h_sum"),
-          r.getAs[Seq[Long]]("h_buckets").toList))
-    }.toMap
     val sep = TierRollup.histogramFromObs(obs, ladder, 60L)
     assert(TierRollup.histColumns(fused).columns.sameElements(sep.columns))
-    assert(histMap(TierRollup.histColumns(fused)) == histMap(sep))
+    assert(collectHist(TierRollup.histColumns(fused)) == collectHist(sep))
   }
 
   test("fused 1m stage plan: ONE exchange, hash aggregation, no sort-based fallback") {
@@ -123,53 +128,52 @@ class RollupSpec extends AnyFunSuite {
       s"fused agg must stay hash-based and sort-free:\n$plan")
   }
 
-  test("co-partitioned cascade: every tier, histogram and page byte-stream " +
-      "equals the standard run (skewed fixture)") {
-    import java.nio.file.Files
+  test("default-shape cascade (fused 1m, histograms, pages): every committed " +
+      "table equals the oracle (skewed fixture)") {
+    val ladder = Schemas.bucketLadder
     val obs = obsDf(20000, skewed = true)
-    def runAll(copart: Boolean): Map[String, Set[String]] = {
-      val base = Files.createTempDirectory("copart").toString
-      val results = TierCascade.run(spark, obs, base, seriesBuckets = 4,
-        salts = 1, withHistograms = true, withPages = true,
-        copartition = copart)
-      results.map { tr =>
-        val rows = tr.table.read().drop("pk").collect().map { r =>
-          r.toSeq.map {
-            case b: Array[Byte] => b.map("%02x".format(_)).mkString
-            case s: Seq[_] => s.mkString(",")
-            case x => String.valueOf(x)
-          }.mkString("|")
-        }.toSet
-        tr.name -> rows
-      }.toMap
-    }
-    val std = runAll(copart = false)
-    val cop = runAll(copart = true)
-    assert(std.keySet == cop.keySet)
-    std.foreach { case (name, rows) =>
-      assert(cop(name) == rows, s"tier $name diverges under copartition")
-    }
-  }
+    val pts = oracleObs(obs)
+    val base = java.nio.file.Files.createTempDirectory("cascade").toString
+    val tables = TierCascade.run(spark, obs, base, seriesBuckets = 4, salts = 1,
+      withHistograms = true, withPages = true)
+      .map(tr => tr.name -> tr.table.read().drop("pk")).toMap
+    assert(tables.keySet == Set("1m", "1h", "1d", "hist_1m", "hist_1h", "hist_1d", "pages_1h"))
 
-  test("co-partitioned fused agg plans exchange-free above the arrangement") {
-    val arrangedObs = obsDf(5000)
-      .repartition(col("series"))
-      .sortWithinPartitions("series", "ts", "seq")
-      .persist()
-    try {
-      arrangedObs.count()
-      val fused = TierRollup.fromObsWithHistogram(arrangedObs,
-        Schemas.bucketLadder, 60L)
-      fused.count()
-      val plan = fused.queryExecution.executedPlan.toString
-      // the only exchange is INSIDE the cached arrangement; above the cache
-      // boundary the aggregate must be exchange-free and hash-based
-      val above = plan.split("InMemoryRelation").head
-      assert(!above.contains("Exchange"),
-        s"expected no exchange above the arrangement cache:\n$plan")
-      assert(above.contains("HashAggregate") && !above.contains("SortAggregate"),
-        s"expected hash aggregation:\n$plan")
-    } finally arrangedObs.unpersist()
+    val o1m = RefRollup.rollup(pts, 60L)
+    val o1h = RefRollup.mergeTier(o1m, 3600L)
+    Seq("1m" -> o1m, "1h" -> o1h, "1d" -> RefRollup.mergeTier(o1h, 86400L)).foreach {
+      case (name, o) =>
+        assert(collectTier(tables(name)) == o.map(p => (p.series, p.bucket) -> p).toMap,
+          s"tier $name")
+    }
+
+    def cell(series: String, ts: Long, bucketSec: Long) =
+      (series, math.floorDiv(ts, bucketSec) * bucketSec)
+    val oh1m = pts.groupBy(p => cell(p._1, p._2, 60L)).map { case (k, ps) =>
+      k -> RefRollup.histogram(ps.sortBy(p => (p._2, p._3)).map(_._4), ladder)
+    }
+    def mergeHist(finer: Map[(String, Long), (Long, Double, Array[Long])], bucketSec: Long) =
+      finer.groupBy { case ((s, b), _) => cell(s, b, bucketSec) }
+        .map { case (k, cells) => k -> cells.values.reduce(RefRollup.mergeHistogram) }
+    val oh1h = mergeHist(oh1m, 3600L)
+    def histList(m: Map[(String, Long), (Long, Double, Array[Long])]) =
+      m.map { case (k, (c, s, b)) => k -> ((c, s, b.toList)) }
+    Seq("hist_1m" -> oh1m, "hist_1h" -> oh1h, "hist_1d" -> mergeHist(oh1h, 86400L)).foreach {
+      case (name, o) => assert(collectHist(tables(name)) == histList(o), s"tier $name")
+    }
+
+    val rawByHour = pts.groupBy(p => cell(p._1, p._2, 3600L)).map { case (k, ps) =>
+      k -> ps.sortBy(p => (p._2, p._3)).map(p => (p._2, p._4))
+    }
+    val pages = tables("pages_1h").collect()
+    assert(pages.length == rawByHour.size)
+    pages.foreach { r =>
+      val k = (r.getAs[String]("series"), r.getAs[Long]("bucket"))
+      val (ts, vs) = GorillaCodec.decode(r.getAs[Array[Byte]]("page"))
+      assert(r.getAs[Boolean]("roundtrip_ok"), s"page $k roundtrip_ok")
+      assert(r.getAs[Int]("n_points") == ts.length, s"page $k n_points")
+      assert(ts.toSeq.zip(vs) == rawByHour(k), s"page $k points")
+    }
   }
 
   test("histogram_quantile: interpolation, first-rung lower bound 0, overflow fallback, empty null") {

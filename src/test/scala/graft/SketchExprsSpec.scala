@@ -174,9 +174,9 @@ class SketchExprsSpec extends AnyFunSuite {
     (8L, "x " * 200 + "x") // long doc
   )
 
-  test("graft_shingles matches the HOF chain (codegen and interpreted, k=2,3)") {
+  test("graft_shingles matches the HOF chain (codegen and interpreted, k=2,3,20)") {
     val df = shingleCorpus.toDF("doc_id", "text")
-    for (k <- Seq(2, 3); mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN"))
+    for (k <- Seq(2, 3, 20); mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN"))
       withFactoryMode(mode) {
         val rows = df.select(
           Dedup.shingles(col("text"), k).as("native"),

@@ -2,7 +2,7 @@
 # Run a dev probe class in a fresh JVM with the bench's exact JVM settings
 # (same --add-opens set and heap as build.sbt's javaOptions), without sbt's
 # in-between overhead. Usage:
-#   tools/run_probe.sh graft.tools.CascProbe 8 1 /tmp/graft_bench/raw_v2_n48000000 zstd
+#   tools/run_probe.sh graft.tools.QTimeProbe q51_cosine_neardup q52_cosine_neardup_lsh
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*"
