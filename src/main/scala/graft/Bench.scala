@@ -137,7 +137,7 @@ object Bench {
     if (cands.isEmpty) None else Some(cands.minBy(_._2)._1)
   }
 
-  private def session(cpus: Int, aqe: Boolean = true,
+  private[graft] def session(cpus: Int, aqe: Boolean = true,
       codec: String = "lz4"): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -192,7 +192,7 @@ object Bench {
     * rollup path never reads them — column pruning keeps the scan at
     * (doc_id, n_tok, source)).
     */
-  private def ensureRaw(n: Long): String = {
+  private[graft] def ensureRaw(n: Long): String = {
     val path = s"/tmp/graft_bench/raw_v2_n$n"
     val done = new java.io.File(s"$path/_SUCCESS")
     if (!done.exists()) {

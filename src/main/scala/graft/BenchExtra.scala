@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-6 optimization harness (guide §1: measure first; Bench.scala is
-  * frozen, so the extra measurements live here). Replicates the query pass's
-  * session + noop-sink methodology exactly, but over a selectable query
-  * subset with optional repeats and plan dumps, for fast iteration:
+  * frozen, so the extra measurements live here). Runs on the query pass's
+  * own session (`Bench.session`) with its noop-sink methodology, but over a
+  * selectable query subset with optional repeats and plan dumps, for fast
+  * iteration:
   *
   *   sbt "runMain graft.BenchExtra time q39,q64 3"   — time queries, N reps
   *   sbt "runMain graft.BenchExtra time all 2"       — whole pass, 2 reps
@@ -17,23 +16,6 @@ import org.apache.spark.sql.SparkSession
   * around build+execute. Queries run in sorted-name order like the pass.
   */
 object BenchExtra {
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-benchextra-$cpus")
-      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", {
-        val d = "/dev/shm/graft-spark-local"
-        new java.io.File(d).mkdirs(); d
-      })
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** Per-query job/stage attribution: counts + wall of every stage between
     * resets, so a query's fixed cost decomposes into (#jobs, #stages,
@@ -73,7 +55,7 @@ object BenchExtra {
       filter == "all" || names.exists(f => n.startsWith(f))
     }
     require(selected.nonEmpty, s"no queries match '$filter'")
-    val s = session(cpus)
+    val s = Bench.session(cpus)
     try {
       mode match {
         case "time" =>

@@ -43,8 +43,6 @@ final class BitWriter(initialWords: Int = 16) {
 
   def writeBit(b: Boolean): Unit = writeBits(if (b) 1L else 0L, 1)
 
-  def lengthBits: Long = bitLen
-
   /** Snapshot to a byte array: [4-byte big-endian bit length][packed words].
     * The header is 32-bit, so pages are capped at 2^32-1 bits (~512 MB) —
     * fail loudly rather than silently truncating the length and decoding

@@ -1,29 +1,15 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
-/** Core data model (SURVEY.md §1).
-  *
-  * `TokenSeq` is the BASELINE.json input_hint row: a pre-tokenized training
-  * sequence. `RollupPoint` is one rolled-up (series, bucket) cell carrying the
-  * vertex merge semantics result (sum/gauge-last) extended with
-  * min/max/count/last per the north rule (reference MetricValue has only
+/** Core data model (SURVEY.md §1): one rolled-up (series, bucket) tier cell.
+  * It carries the vertex merge semantics result (sum/gauge-last) extended
+  * with min/max/count/last per the north rule (reference MetricValue has only
   * sum/gauge/histogram/summary: /root/reference/lib/event/src/metric/mod.rs:24-39;
-  * min/max/count/last extension per SURVEY.md §2.9).
-  */
-final case class TokenSeq(doc_id: String, tokens: Array[Int], n_tok: Int, source: String)
-
-/** A metric observation derived from a row: series identity + event time + value.
-  * `seq` is a deterministic per-point sequence id used as the total-order
-  * tiebreak for "last" (the reference folds in arrival order — e.g. MetricSet
-  * upsert replaces, /root/reference/lib/framework/src/sink/buffer/metrics.rs:176-181;
-  * we replace arrival order with (ts, seq) event order so results are
-  * deterministic under any partitioning).
-  */
-final case class MetricObs(series: String, ts: Long, seq: Long, value: Double)
-
-/** One rolled-up tier cell. `lastTs`/`lastSeq` travel with the row so that
-  * coarser tiers (1m→1h→1d) can merge "last" correctly.
+  * min/max/count/last extension per SURVEY.md §2.9). "Last" follows (ts, seq)
+  * event order instead of the reference's arrival order (MetricSet upsert
+  * replaces, /root/reference/lib/framework/src/sink/buffer/metrics.rs:176-181),
+  * so results are deterministic under any partitioning. `lastTs`/`lastSeq`
+  * travel with the row so that coarser tiers (1m→1h→1d) can merge "last"
+  * correctly.
   */
 final case class RollupPoint(
     series: String,
@@ -37,13 +23,6 @@ final case class RollupPoint(
     lastSeq: Long)
 
 object Schemas {
-  /** BASELINE.json input_hint: (doc_id:string, tokens:array<int32>, n_tok:int32, source:string) */
-  val tokenSeq: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("tokens", ArrayType(IntegerType, containsNull = false), nullable = false),
-    StructField("n_tok", IntegerType, nullable = false),
-    StructField("source", StringType, nullable = false)))
-
   /** Prometheus default histogram bucket ladder ×1000 (token-count domain).
     * Ladder source: /root/reference/src/transforms/metricalize.rs:21-25
     * (0.005..10.0), scaled per FIXTURES.md §1.

@@ -85,10 +85,4 @@ object Winnow {
     val u = udf { (t: String) => stats(t, k, w) }
     u(text)
   }
-
-  /** Column form: the fingerprint set itself (array<bigint>, ascending). */
-  def fingerprintsCol(text: Column, k: Int = 8, w: Int = 16): Column = {
-    val u = udf { (t: String) => fingerprints(t, k, w) }
-    u(text)
-  }
 }

@@ -476,23 +476,34 @@ object DocQueries {
     * the shuffled-join fallback instead of broadcast.
     */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    val docs = documents(s, dir)
+    val docs = decontamDocs(s, dir)
+    trainingGrams(docs)
+      .join(broadcast(benchGrams(docs)), "g")
+      .groupBy(col("doc_id"), col("source"))
+      .agg(countDistinct(col("g")).as("n_shared"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** q69/q78 input: (doc_id, source, toks) with whitespace tokens. */
+  private def decontamDocs(s: SparkSession, dir: String): DataFrame =
+    documents(s, dir)
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
-    val bench = docs.filter(pmod(col("doc_id"), lit(97L)) === 0)
+
+  /** The benchmark's distinct 8-gram md5s: a 20-token slice of every 97th doc. */
+  private def benchGrams(docs: DataFrame): DataFrame =
+    docs.filter(pmod(col("doc_id"), lit(97L)) === 0)
       .select(slice(col("toks"), 6, 20).as("btoks"))
       .filter(size(col("btoks")) >= 8)
       .withColumn("i", explode(sequence(lit(1), size(col("btoks")) - 7)))
       .select(md5(concat_ws(" ", slice(col("btoks"), col("i"), lit(8)))).as("g"))
       .distinct()
+
+  /** Every training doc's 8-gram md5s as (doc_id, source, g). */
+  private def trainingGrams(docs: DataFrame): DataFrame =
     docs.filter(size(col("toks")) >= 8)
       .withColumn("i", explode(sequence(lit(1), size(col("toks")) - 7)))
       .select(col("doc_id"), col("source"),
         md5(concat_ws(" ", slice(col("toks"), col("i"), lit(8)))).as("g"))
-      .join(broadcast(bench), "g")
-      .groupBy(col("doc_id"), col("source"))
-      .agg(countDistinct(col("g")).as("n_shared"))
-      .orderBy(col("doc_id"))
-  }
 
   /** DuckDB twin of [[decontaminate]]. */
   val decontaminateOracle: String =
@@ -755,46 +766,32 @@ object DocQueries {
   /** q78: decontamination with a BLOOM prefilter — the 100 TB shape of q69.
     * q69 broadcast-joins the benchmark gram set, which stops working when
     * the held-out suite is itself large; here a Bloom filter over the
-    * benchmark grams (~10 bits/gram vs the 32-byte md5 strings) prefilters
-    * the training-gram stream BEFORE the join, so the join input shrinks by
-    * ~1/fpp and the join itself needs no broadcast hint. The exact join
+    * benchmark grams' xxhash64 prefilters the training-gram stream BEFORE the
+    * join, so the join input shrinks to the candidates and the join itself
+    * needs no broadcast hint. The filter is part of the plan: Spark's
+    * runtime-filter pair, a `BloomFilterAggregate` over the bench grams run
+    * as a scalar subquery and a `BloomFilterMightContain` predicate on the
+    * training side, sized by the session's
+    * `spark.sql.optimizer.runtime.bloomFilter.*` conf (by default 8M bits for
+    * 10^6 items, far above the bench-gram count at every fixture SF).
+    * Building the frame runs no job and persists nothing. The exact join
     * after the prefilter removes Bloom false positives, which is what keeps
     * q69's DuckDB oracle EXACT for this variant too (the Bloom is pure
     * candidate reduction, never a truth source).
     */
   def decontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    val docs = documents(s, dir)
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
-    val benchPlan = docs.filter(pmod(col("doc_id"), lit(97L)) === 0)
-      .select(slice(col("toks"), 6, 20).as("btoks"))
-      .filter(size(col("btoks")) >= 8)
-      .withColumn("i", explode(sequence(lit(1), size(col("btoks")) - 7)))
-      .select(md5(concat_ws(" ", slice(col("btoks"), col("i"), lit(8)))).as("g"))
-      .distinct()
-    // ONE derivation of the benchmark grams: persisted as an RDD (not a
-    // CacheManager entry — the cache must outlive this builder for the
-    // verify join, and ContextCleaner releases an RDD persist when the
-    // caller drops the returned plan). Without it, stat.bloomFilter's eager
-    // job and the verify join each run the full bench derivation.
-    val benchRdd = benchPlan.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bench = s.createDataFrame(benchRdd, benchPlan.schema)
-    // Bloom sized from the DATA (round 6 — the round-5 constant 200k would
-    // silently degrade fpp once the benchmark-gram count outgrew it at
-    // larger SFs; still correct — the exact join cleans up — but the
-    // prefilter's ~1/fpp cut erodes). The count runs over the already
-    // persisted RDD, so the extra action is a cached scan, not a re-derive.
-    val nGrams = math.max(1L, benchRdd.count())
-    val bloom = bench.stat.bloomFilter("g", expectedNumItems = nGrams, fpp = 0.001)
-    val bcBloom = s.sparkContext.broadcast(bloom)
-    val mightContain = udf((g: String) => g != null && bcBloom.value.mightContainString(g))
-    docs.filter(size(col("toks")) >= 8)
-      .withColumn("i", explode(sequence(lit(1), size(col("toks")) - 7)))
-      .select(col("doc_id"), col("source"),
-        md5(concat_ws(" ", slice(col("toks"), col("i"), lit(8)))).as("g"))
-      .filter(mightContain(col("g"))) // Bloom prefilter: ~1000× join-input cut
-      .join(bench, "g") // exact verify — no broadcast hint; the prefiltered
-                        // stream is small enough for any join strategy
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    val docs = decontamDocs(s, dir)
+    val bench = benchGrams(docs)
+    val key = expression(xxhash64(col("g")))
+    val bloom = bench
+      .select(column(new BloomFilterAggregate(key).toAggregateExpression()))
+      .scalar()
+    trainingGrams(docs)
+      .filter(column(BloomFilterMightContain(expression(bloom), key)))
+      .join(bench, "g") // exact verify of the Bloom's candidates
       .groupBy(col("doc_id"), col("source"))
       .agg(countDistinct(col("g")).as("n_shared"))
       .orderBy(col("doc_id"))

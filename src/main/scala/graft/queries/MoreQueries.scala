@@ -366,6 +366,10 @@ object MoreQueries {
     */
   def internalMetricsCensus(s: SparkSession, dir: String): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("graft_im").toString
+    // the lake must outlive this builder (the frame reads it back lazily),
+    // so it is removed when the JVM's Hadoop FileSystems close
+    val basePath = new org.apache.hadoop.fs.Path(base)
+    basePath.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(basePath)
     val lake = new LakeTable(s, base, "events_lake", "event_type")
     lake.append(EventQueries.events(s, dir), "events->lake census")
     lake.internalMetrics()

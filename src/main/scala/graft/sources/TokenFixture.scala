@@ -79,10 +79,6 @@ object TokenFixture {
     gapped.select(col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("id").as("_i"))
   }
 
-  /** Input-hint-exact projection (doc_id, tokens, n_tok, source). */
-  def inputHintTable(spark: SparkSession, n: Long): DataFrame =
-    tokenTable(spark, n).select("doc_id", "tokens", "n_tok", "source")
-
   /** Derive metric observations from a token table (FIXTURES.md §1 derived
     * columns): series = source # hash-bucket(doc_id)%256 (the
     * MetricSeries{name,tags} analog, /root/reference/lib/event/src/metric/mod.rs:67-71),

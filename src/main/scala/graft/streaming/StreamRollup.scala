@@ -35,22 +35,6 @@ object StreamRollup {
         col("sum_v"), col("cnt"), col("min_v"), col("max_v"), col("last_v"),
         col("_ord.ts").as("last_ts"), col("_ord.seq").as("last_seq"))
 
-  /** Streaming MetricsBuffer batching analog
-    * (/root/reference/lib/framework/src/sink/buffer/metrics.rs:176-181):
-    * within each micro-batch window, the latest point per series wins
-    * (upsert-replace). Emitted per window close.
-    */
-  def latestPerSeriesStream(obs: DataFrame, bucketSec: Long,
-      watermark: String = "10 minutes"): DataFrame =
-    obs
-      .withColumn("ts_ts", timestamp_seconds(col("ts")))
-      .withWatermark("ts_ts", watermark)
-      .groupBy(window(col("ts_ts"), s"$bucketSec seconds").as("w"), col("series"))
-      .agg(max_by(col("value"), struct(col("ts"), col("seq"))).as("last_v"),
-        max(col("ts")).as("last_ts"))
-      .select(col("series"), unix_timestamp(col("w.start")).as("bucket"),
-        col("last_v"), col("last_ts"))
-
   /** Streaming dedup (SURVEY §2.6 dedup transform): first occurrence per key
     * passes. State really IS bounded here: dropDuplicatesWithinWatermark
     * evicts a key's state once the watermark passes its event time — plain

@@ -114,23 +114,13 @@ object TierRollup {
     * bucket range): with 10^9 sparse series over a year of 1-minute buckets, a
     * global-bounds spine is ~5·10^14 rows regardless of data, while the
     * per-series spine is proportional to the data's actual span — the
-    * round-1 scale defect. `globalBounds = true` restores the dense
-    * all-series × global-range spine (the reference exporter renders every
-    * live series each scrape, which is that shape at small windows).
+    * round-1 scale defect.
     */
-  def gapFill(tier: DataFrame, bucketSec: Long, globalBounds: Boolean = false): DataFrame = {
-    val spine =
-      if (globalBounds) {
-        val bounds = tier.agg(min(col("bucket")).as("_lo"), max(col("bucket")).as("_hi"))
-        tier.select(col("series")).distinct()
-          .crossJoin(broadcast(bounds))
-          .select(col("series"),
-            explode(sequence(col("_lo"), col("_hi"), lit(bucketSec))).as("bucket"))
-      } else
-        tier.groupBy(col("series"))
-          .agg(min(col("bucket")).as("_lo"), max(col("bucket")).as("_hi"))
-          .select(col("series"),
-            explode(sequence(col("_lo"), col("_hi"), lit(bucketSec))).as("bucket"))
+  def gapFill(tier: DataFrame, bucketSec: Long): DataFrame = {
+    val spine = tier.groupBy(col("series"))
+      .agg(min(col("bucket")).as("_lo"), max(col("bucket")).as("_hi"))
+      .select(col("series"),
+        explode(sequence(col("_lo"), col("_hi"), lit(bucketSec))).as("bucket"))
     val w = Window.partitionBy(col("series")).orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     spine.join(tier, Seq("series", "bucket"), "left")

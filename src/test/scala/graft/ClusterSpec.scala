@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Cluster
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -12,14 +11,7 @@ import scala.util.Random
   * covers the operator on graph shapes the embedding pair set can't plant
   * (long chains — the O(log n) convergence case — big stars, singletons).
   */
-class ClusterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ClusterSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   /** Union-find oracle: (node -> min id of its component) for every node

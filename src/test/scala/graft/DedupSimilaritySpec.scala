@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * have no DuckDB oracle — hash functions differ across engines — so the
   * driver records rows-only checks and correctness is proven here).
   */
-class DedupSimilaritySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupSimilaritySpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   /** Deterministic corpus with planted near-duplicates. */
@@ -559,21 +552,35 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), s"cross product in IVF plan:\n$plan")
   }
 
-  test("data-sized Bloom prefilter holds its configured fpp at sf0.1-scale gram counts") {
-    // q78's filter is sized from the counted benchmark-gram RDD (round 6 —
-    // the round-5 constant 200k would silently degrade fpp past it). At any
-    // gram count, sizing expectedNumItems = count must keep the realized
-    // false-positive rate within ~2x of the configured 0.001 (the sbbf bound
-    // is probabilistic; 2x covers the variance at this probe size).
-    import spark.implicits._
-    val n = 50000L
-    val grams = (0L until n).map(i => s"gram_$i").toDF("g")
-    val bloom = grams.stat.bloomFilter("g", expectedNumItems = n, fpp = 0.001)
-    val falsePos = (0 until 100000)
-      .count(i => bloom.mightContainString(s"absent_$i"))
-    assert(falsePos <= 200, s"fpp ${falsePos / 100000.0} exceeds 2x configured 0.001")
-    (0L until n by 997L).foreach(i =>
-      assert(bloom.mightContainString(s"gram_$i"), "bloom lost a member"))
+  test("q78 in-plan Bloom prefilter: q69's rows, no UDF, no persist") {
+    // q78 prefilters training grams with Spark's BloomFilterAggregate /
+    // BloomFilterMightContain pair before its exact join. A driver-built
+    // filter would show up as a ScalaUDF, an extra persisted RDD, or a
+    // candidate stream wider than the 151 grams a data-sized sbbf passes
+    // at sf0.001 (the in-plan filter passes the 97 true members).
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, ScalaUDF}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = "/root/testdata/sf0.001"
+    assume(new java.io.File(dir).isDirectory)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val q78 = graft.queries.DocQueries.decontaminateBloom(spark, dir)
+    val got = q78.collect().toSeq
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    assert(got == graft.queries.DocQueries.decontaminate(spark, dir).collect().toSeq)
+    assert(got.nonEmpty)
+    val plan = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(q78.queryExecution.executedPlan) { case n => n }
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))))
+    // Catalyst also infers the predicate onto the bench side of the join;
+    // the training side is the one that carries doc_id
+    val trainingFilters = plan.collect {
+      case f: FilterExec if f.condition.exists(_.isInstanceOf[BloomFilterMightContain]) &&
+          f.output.exists(_.name == "doc_id") => f
+    }
+    assert(trainingFilters.size == 1, q78.queryExecution.executedPlan.toString)
+    val passed = trainingFilters.head.metrics("numOutputRows").value
+    assert(passed > 0 && passed <= 151, s"Bloom prefilter passed $passed grams")
   }
 
   test("spherical k-means refine does not degrade the cosine objective") {

@@ -1,21 +1,13 @@
 package graft
 
 import graft.functions.Exporter
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Sink-side shaping semantics vs the reference (SURVEY §2.1 sinks):
   * remote-write batch packing and exporter text rendering order.
   */
-class ExporterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExporterSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("batch packing: <=maxEvents per (tenant, batch), deterministic order") {

@@ -15,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shape as Pack's prefix sum. Any new query that trips this test either
   * partitions its window or documents a bounded frame here.
   */
-class GlobalWindowSpec extends AnyFunSuite {
-
-  lazy val spark: org.apache.spark.sql.SparkSession =
-    org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+class GlobalWindowSpec extends AnyFunSuite with SparkSuite {
 
   private def globalWindows(p: SparkPlan): Seq[WindowExec] = {
     val self = p match {

@@ -3,7 +3,6 @@ package graft
 import graft.lake.LakeTable
 import graft.sources.TokenFixture
 import graft.tiers.TierCascade
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -11,14 +10,7 @@ import java.nio.file.Files
 /** Lake-layer resume semantics (FIXTURES.md §5): partition-level idempotence,
   * kill-and-rerun recomputing only uncommitted partitions, retention expire.
   */
-class LakeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LakeSpec extends AnyFunSuite with SparkSuite {
 
   private def tmpDir(): String = Files.createTempDirectory("lake").toString
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.Metricalize
 import graft.functions.Metricalize.MetricSpec
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * state machine (/root/reference/src/transforms/metricalize.rs:67-120 value
   * and tag extraction; :233-248 kind-mismatch reset + failure count).
   */
-class MetricalizeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MetricalizeSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private val logs = Seq(

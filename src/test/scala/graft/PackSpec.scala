@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.Pack
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Two-phase distributed grouped prefix sum vs the single-task window oracle,
   * plus concat-and-chunk packing-census invariants.
   */
-class PackSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PackSpec extends AnyFunSuite with SparkSuite {
 
   /** Deterministic multi-group fixture: ids NOT contiguous per group (groups
     * interleave in order space) and values vary so misaligned offsets show.

@@ -2,21 +2,13 @@ package graft
 
 import graft.functions.RemoteWrite
 import graft.functions.RemoteWrite._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** WriteRequest wire-format roundtrip — the mirror of the reference sink's
   * own encode test (/root/reference/src/sinks/prometheus_remote_write.rs:
   * 253-374 decodes its own request bytes back).
   */
-class RemoteWriteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RemoteWriteSpec extends AnyFunSuite with SparkSuite {
 
   test("proto roundtrip: labels, samples, metadata survive encode/decode") {
     val req = PromWriteRequest(

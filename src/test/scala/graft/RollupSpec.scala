@@ -5,21 +5,14 @@ import graft.model.{RollupPoint, Schemas}
 import graft.ref.RefRollup
 import graft.sources.TokenFixture
 import graft.tiers.{TierCascade, TierRollup}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark rollup vs the single-node oracle (bit-for-bit; token-count values are
   * integral so f64 sums are order-insensitive — SURVEY.md §7.5.1).
   */
-class RollupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RollupSpec extends AnyFunSuite with SparkSuite {
 
   private def obsDf(n: Long, skewed: Boolean = false): DataFrame =
     TokenFixture.deriveObs(TokenFixture.tokenTable(spark, n, skewed = skewed, withTokens = false))
@@ -239,8 +232,6 @@ class RollupSpec extends AnyFunSuite {
     val tier = TierRollup.fromObs(rows.toDF("series", "ts", "seq", "value"), 60L)
     val perSeries = TierRollup.gapFill(tier, 60L)
     assert(perSeries.count() == 5)
-    val global = TierRollup.gapFill(tier, 60L, globalBounds = true)
-    assert(global.count() == 2 * 1442L)
     // LOCF still correct on the per-series path
     val early = perSeries.filter(col("series") === "early").orderBy("bucket")
       .select("bucket", "last_v_filled").as[(Long, Double)].collect().toSeq

@@ -2,7 +2,7 @@ package graft
 
 import graft.expressions.{SketchExprs, VectorExprs}
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in both codegen and interpreted evaluation modes — the 64-bit wrapping
   * multiply-add and the ±1 vote fold leave no tolerance.
   */
-class SketchExprsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchExprsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def withFactoryMode[A](mode: String)(f: => A): A = {

@@ -2,7 +2,6 @@ package graft
 
 import graft.ref.RefRollup
 import graft.streaming.StreamRollup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * batch/oracle rollup of the same points (SURVEY.md §2.8: event-time windows
   * replace the reference's processing-time flush deterministically).
   */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("streaming rollup over micro-batches equals the oracle rollup") {
     import spark.implicits._

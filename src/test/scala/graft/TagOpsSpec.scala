@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.TagOps
 import graft.functions.TagOps._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (/root/reference/src/transforms/relabel.rs:190-384), plus map-model
   * properties the reference's BTreeMap gives for free (canonical ordering).
   */
-class TagOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TagOpsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   /** Every case runs through BOTH the Catalyst composition (applyOps) and the

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{DedupFields, Throttle}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference's table-driven test shapes: throttle/mod.rs tests, dedup.rs
   * tests).
   */
-class ThrottleLruSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ThrottleLruSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   /** Driver-side GCRA replay (the gcra crate's check_and_modify). */

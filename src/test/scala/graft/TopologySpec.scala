@@ -2,21 +2,13 @@ package graft
 
 import graft.plans.Topology
 import graft.plans.Topology._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Config-DAG semantics vs the reference's topology loader (SURVEY §1.5/§3.1):
   * validation errors, fanout/union of multiple inputs, non-exclusive route
   * ports with _unmatched, and an end-to-end source→filter→rollup chain.
   */
-class TopologySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TopologySpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

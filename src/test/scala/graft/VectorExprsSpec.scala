@@ -2,7 +2,7 @@ package graft
 
 import graft.expressions.{GraftExtensions, VectorExprs}
 import graft.ops.Similarity
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * results must match BIT-FOR-BIT (Double.doubleToLongBits, not ≈), in both
   * the codegen and the interpreted evaluation modes.
   */
-class VectorExprsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VectorExprsSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def withFactoryMode[A](mode: String)(f: => A): A = {

@@ -3,18 +3,10 @@ package graft
 import graft.functions.Vtl
 import graft.sources.PromText
 import graft.tiers.AsOfJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class VtlAsofPromSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VtlAsofPromSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("VTL case styles (camel/pascal/snake/kebab)") {

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.Vtl
 import graft.sources.Scrape
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * path cases mirror the reference's own tests
   * (/root/reference/src/sources/prometheus_pushgateway.rs:195-282).
   */
-class VtlParseScrapeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VtlParseScrapeSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("parse_query: decode, duplicates as ordered arrays, leading ?") {

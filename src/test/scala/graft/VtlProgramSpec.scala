@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.VtlProgram
 import graft.functions.VtlProgram._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * for-k,v over sorted map entries with continue AND break, return, and the
   * single-Project compilation guarantee.
   */
-class VtlProgramSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VtlProgramSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def base = Seq(

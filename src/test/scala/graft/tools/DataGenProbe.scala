@@ -1,34 +1,12 @@
 package graft.tools
 
-import graft.sources.TokenFixture
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: pre-generate the bench raw token table (identical to
-  * Bench.ensureRaw) so probe shots don't each pay datagen:
+/** Dev tool: pre-generate the bench raw token table (Bench.ensureRaw) so
+  * probe shots don't each pay datagen:
   *   sbt "Test/runMain graft.tools.DataGenProbe [n]"
   */
 object DataGenProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 48000000L
-    val path = s"/tmp/graft_bench/raw_v2_n$n"
-    if (new java.io.File(s"$path/_SUCCESS").exists()) {
-      println(s"DATAGEN exists $path"); return
-    }
-    val s = SparkSession.builder().master("local[32]")
-      .appName("datagen")
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", {
-        val d = "/dev/shm/graft-spark-local"; new java.io.File(d).mkdirs(); d
-      })
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    try TokenFixture.tokenTable(s, n, skewed = true, maxExtraTok = 48,
-        withGaps = true, fastTokens = true)
-      .drop("_i")
-      .write.mode("overwrite").parquet(path)
-    finally s.stop()
-    println(s"DATAGEN done $path")
+    println(s"DATAGEN ${graft.Bench.ensureRaw(n)}")
   }
 }

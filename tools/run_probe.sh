@@ -2,7 +2,7 @@
 # Run a dev probe class in a fresh JVM with the bench's exact JVM settings
 # (same --add-opens set and heap as build.sbt's javaOptions), without sbt's
 # in-between overhead. Usage:
-#   tools/run_probe.sh graft.tools.QTimeProbe q51_cosine_neardup q52_cosine_neardup_lsh
+#   tools/run_probe.sh graft.PackProbe 2
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*"
