@@ -22,7 +22,7 @@ object SparkEntry {
     * tier. Driver smoke-checks rows>0.
     */
   def entry(spark: SparkSession): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_entry").toString
+    val base = graft.lake.LakeTable.tempBase(spark, "graft_entry")
     val tok = TokenFixture.tokenTable(spark, 20000L, withTokens = false)
     val obs = TokenFixture.deriveObs(tok).select("series", "ts", "seq", "value")
     val results = TierCascade.run(spark, obs, base, seriesBuckets = 8, salts = 4)

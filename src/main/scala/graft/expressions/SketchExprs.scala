@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   * `UnsafeArrayData` — zero boxing end-to-end.
   *
   * Parity contract (pinned bit-for-bit by SketchExprsSpec against the UDF
-  * forms kept in `Dedup.minhashSignatureUdf`/`Dedup.simhashVotesUdf`):
+  * forms these replaced, now kept with the specs):
   * identical 64-bit wrapping arithmetic and loop order, so no oracled value
   * (q27/q28 jaccard, q29 hamming, band keys) can move. Null semantics are
   * STRICTER than the UDFs — a NULL input array or a NULL element returns
@@ -189,9 +189,9 @@ object SketchExprs {
     * original string from word i's start to word i+k−1's end (a space byte,
     * 0x20, never occurs inside a UTF-8 multibyte sequence). One pass finds
     * the space offsets; shingles are byte spans; hashing is the same XXH64
-    * call `xxhash64(shingle)` lowers to. Parity with the HOF forms (kept in
-    * Dedup as `shinglesHof`/`shingleHashesHof`/`splitHashesHof`) is pinned
-    * bit-for-bit by SketchExprsSpec, including the null-text case ([""] —
+    * call `xxhash64(shingle)` lowers to. Parity with the HOF forms (kept
+    * with the specs as the semantics reference) is pinned bit-for-bit by
+    * SketchExprsSpec, including the null-text case ([""] —
     * the `when` in the HOF form falls through to the otherwise branch) and
     * empty/consecutive/trailing-space token edge cases.
     */
@@ -245,8 +245,8 @@ object SketchExprs {
   }
 
   /** Distinct k-word shingles as an array<string> — the codegen'd form of
-    * `Dedup.shinglesHof` (see [[ShingleScan]]). Null text yields [""] for
-    * bit-parity with the HOF form's fall-through.
+    * `Dedup.shingles`' original HOF chain (see [[ShingleScan]]). Null text
+    * yields [""] for bit-parity with the HOF form's fall-through.
     */
   case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
     require(k >= 1, s"shingle k=$k must be >= 1")

@@ -154,37 +154,24 @@ object TagOps {
     fused(tags, argsArr)
   }
 
-  /** Escape the canonical-string metacharacters inside a key/value: '\', '='
-    * and ',' get a backslash prefix, so [[canonicalTags]] is INJECTIVE — a
-    * value containing "1,b=2" can no longer collide with a second tag (tag
-    * values with commas are reachable: PromText parses quoted label values).
-    */
-  private def escCanonical(c: Column): Column =
-    regexp_replace(c, "([\\\\=,])", "\\\\$1")
-
   /** Canonical sorted "k=v,k=v" form — the tags half of a series identity
     * (BTreeMap iteration order in the reference; prometheus.rs:155-165 sorts
     * labels the same way before encoding). Sort order is on the RAW keys;
     * keys/values are escaped ('\' '=' ',' → backslash-prefixed) so the string
-    * is injective and safe as an exact grouping key. Tags without those
+    * is injective and safe as an exact grouping key — a value containing
+    * "1,b=2" cannot collide with a second tag (tag values with commas are
+    * reachable: PromText parses quoted label values). Tags without those
     * metacharacters render exactly as before.
     *
     * Native one-pass kernel (round 6 — expressions.TagExprs.CanonicalTags):
-    * the HOF composition kept below as [[canonicalTagsHof]] was four
-    * interpreted higher-order functions per row — the per-row cost of every
-    * tag-model groupBy key. Bit-parity pinned by TagOpsSpec.
+    * the HOF composition it replaced was four interpreted higher-order
+    * functions per row — the per-row cost of every tag-model groupBy key.
+    * Bit-parity with that composition pinned by TagOpsSpec.
     */
   def canonicalTags(tags: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.TagExprs.CanonicalTags(
         org.apache.spark.sql.GraftColumnBridge.expression(tags)))
-
-  /** The original HOF form of [[canonicalTags]] — parity reference. */
-  def canonicalTagsHof(tags: Column): Column =
-    array_join(
-      transform(array_sort(map_entries(tags)),
-        e => concat(escCanonical(e("key")), lit("="), escCanonical(e("value")))),
-      ",")
 
   /** 64-bit series identity over (name, sorted tags) — the shuffle/join key
     * for every tag-model rollup. Collision-safe enough for partitioning; the

@@ -203,3 +203,17 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
     }
   }
 }
+
+object LakeTable {
+
+  /** A fresh local temp directory `prefix…` for a lake that must outlive the
+    * code that builds it (frames read it back lazily), so it is deleted
+    * recursively when the JVM's Hadoop FileSystems close at exit.
+    */
+  def tempBase(spark: SparkSession, prefix: String): String = {
+    val base = java.nio.file.Files.createTempDirectory(prefix).toString
+    val path = new Path(base)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(path)
+    base
+  }
+}

@@ -20,43 +20,28 @@ object Dedup {
 
   /** k-word shingles (default 3) as a string array column — the native
     * codegen'd scan (expressions.SketchExprs.WordShingles; round 6): the
-    * interpreted HOF chain kept below as [[shinglesHof]] paid per-element
-    * lambda dispatch + slice/concat allocations (the measured bulk of
-    * q27/q28's map stages). Bit-parity pinned by SketchExprsSpec.
+    * interpreted HOF chain it replaced paid per-element lambda dispatch +
+    * slice/concat allocations (the measured bulk of q27/q28's map stages).
+    * Bit-parity with that chain pinned by SketchExprsSpec.
     */
   def shingles(text: Column, k: Int = 3): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.SketchExprs.WordShingles(
         org.apache.spark.sql.GraftColumnBridge.expression(text), k))
 
-  /** The original HOF form of [[shingles]] — kept as the executable
-    * semantics REFERENCE the native expression is pinned against.
-    */
-  def shinglesHof(text: Column, k: Int = 3): Column = {
-    val words = split(text, " ")
-    when(size(words) >= k,
-      array_distinct(transform(sequence(lit(0), size(words) - k),
-        i => concat_ws(" ", slice(words, i + 1, lit(k))))))
-      .otherwise(array(concat_ws(" ", words))) // short docs: one shingle
-  }
-
   /** 64-bit hashes of the shingles — the fused native scan+hash
     * (SketchExprs.WordShingleHashes; same XXH64/seed as `xxhash64`, so
-    * every band key is unchanged). HOF reference: [[shingleHashesHof]].
+    * every band key is unchanged); pinned to its HOF form by SketchExprsSpec.
     */
   def shingleHashes(text: Column, k: Int = 3): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.SketchExprs.WordShingleHashes(
         org.apache.spark.sql.GraftColumnBridge.expression(text), k))
 
-  /** The original HOF form of [[shingleHashes]] — parity reference. */
-  def shingleHashesHof(text: Column, k: Int = 3): Column =
-    transform(shinglesHof(text, k), s => xxhash64(s))
-
   /** Deterministic multiply-add permutation constants (odd multipliers are
     * bijections on Z/2^64; universal-hashing MinHash, seed=42).
     */
-  private def permConstants(numPerm: Int): (Array[Long], Array[Long]) = {
+  private[graft] def permConstants(numPerm: Int): (Array[Long], Array[Long]) = {
     val rnd = new scala.util.Random(42)
     (Array.fill(numPerm)(rnd.nextLong() | 1L), Array.fill(numPerm)(rnd.nextLong()))
   }
@@ -67,7 +52,7 @@ object Dedup {
     * The shingle hashing itself (split/slice/xxhash64) is codegen'd Catalyst;
     * the inner numPerm×|shingles| min-loop is the native codegen'd
     * [[graft.expressions.SketchExprs.MinHashSig]] expression (round 4 — it
-    * replaced the round-2 JVM UDF kept below as [[minhashSignatureUdf]]:
+    * replaced the round-2 JVM UDF, which SketchExprsSpec pins it against:
     * same loop, but the UDF paid a boxed Seq[Long] conversion per row that
     * the expression's in-place ArrayData reads eliminate; interpreted
     * Catalyst HOFs remain ~40× slower than either).
@@ -78,28 +63,6 @@ object Dedup {
       graft.expressions.SketchExprs.MinHashSig(
         org.apache.spark.sql.GraftColumnBridge.expression(sh),
         as.toSeq, bs.toSeq))
-  }
-
-  /** The original UDF form of [[minhashSignatureFromHashes]] — kept as the
-    * executable semantics REFERENCE: SketchExprsSpec pins the native
-    * expression bit-for-bit against this loop, which is what licenses the
-    * swap under the q27/q28 oracles.
-    */
-  def minhashSignatureUdf(sh: Column, numPerm: Int = 64): Column = {
-    val (as, bs) = permConstants(numPerm)
-    val sigUdf = udf { (hashes: Seq[Long]) =>
-      val sig = Array.fill(numPerm)(Long.MaxValue)
-      hashes.foreach { h =>
-        var j = 0
-        while (j < numPerm) {
-          val v = as(j) * h + bs(j)
-          if (v < sig(j)) sig(j) = v
-          j += 1
-        }
-      }
-      sig
-    }
-    sigUdf(sh)
   }
 
   /** LSH band keys: split the signature into `bands` bands of rows and hash
@@ -252,37 +215,16 @@ object Dedup {
     */
   def simhash64(text: Column): Column = {
     // token hashing is the native SplitHashes scan (round 6 — the
-    // `transform(split(text, " "), w -> xxhash64(w))` HOF kept below as
-    // [[splitHashesHof]] was interpreted per element); the 64-bit vote loop
-    // is the native SketchExprs.SimHashVotes expression (round 4)
+    // `transform(split(text, " "), w -> xxhash64(w))` HOF it replaced was
+    // interpreted per element); the 64-bit vote loop is the native
+    // SketchExprs.SimHashVotes expression (round 4). SketchExprsSpec pins
+    // both against the forms they replaced
     val hashes = org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.SketchExprs.SplitHashes(
         org.apache.spark.sql.GraftColumnBridge.expression(text)))
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.SketchExprs.SimHashVotes(
         org.apache.spark.sql.GraftColumnBridge.expression(hashes)))
-  }
-
-  /** The original HOF token-hash form — parity reference for SplitHashes. */
-  def splitHashesHof(text: Column): Column =
-    transform(split(text, " "), w => xxhash64(w))
-
-  /** The original UDF vote loop — the executable semantics reference
-    * SketchExprsSpec pins [[simhash64]]'s native expression against.
-    */
-  def simhashVotesUdf(hashes: Column): Column = {
-    val voteUdf = udf { (hs: Seq[Long]) =>
-      val votes = new Array[Int](64)
-      hs.foreach { h =>
-        var i = 0
-        while (i < 64) { votes(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1); i += 1 }
-      }
-      var sim = 0L
-      var i = 0
-      while (i < 64) { if (votes(i) > 0) sim |= (1L << i); i += 1 }
-      sim
-    }
-    voteUdf(hashes)
   }
 
   /** SimHash near-dup pairs: band the 64-bit fingerprint into `bands` keys of

@@ -23,17 +23,18 @@ import org.apache.spark.sql.types.LongType
   *  phase 1  per-(bucket, group) totals — a tiny aggregate (buckets ×
   *           groups-touched rows) turned into exclusive carry-in offsets per
   *           group in bucket order (a ≤-nBuckets-rows-per-group window);
-  *           delivered to phase 2 as a driver broadcast while the offsets
-  *           fit `driverCarryLimit`, as a distributed equi-join past it;
   *  phase 2  one streaming pass per partition (sortWithinPartitions +
-  *           mapPartitions): running sum resets to the broadcast offset at
-  *           each (bucket, group) boundary.
+  *           mapPartitions): the running sum resets to the cell's carry-in
+  *           at each (bucket, group) boundary. The carry-in is looked up in a
+  *           driver broadcast of the offsets while they fit
+  *           `driverCarryLimit` rows, and read off a distributed left join
+  *           of them past it — the only branch; the scan is the same.
   *
   * Parallelism is the bucket count at every step and no task ever holds more
   * than its partition slice; the only driver materialization is the
-  * offsets frame, and only while it fits the documented `driverCarryLimit`
-  * bound. Both jobs recompute the bucket as a pure function of the row, so
-  * they can never disagree about the layout.
+  * offsets frame, and only while it fits `driverCarryLimit`. Both phases
+  * recompute the bucket as a pure function of the row, so they can never
+  * disagree about the layout.
   */
 object Pack {
 
@@ -64,7 +65,7 @@ object Pack {
     if (numParts > 0) numParts
     else {
       val conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(1, math.min(conf, df.rdd.getNumPartitions))
+      math.max(1, math.min(conf, df.queryExecution.toRdd.getNumPartitions))
     }
 
   /** Deterministic 60-bit rank from the md5 hex prefix — the shared shuffle/
@@ -85,11 +86,10 @@ object Pack {
     * `orderCol` may collide within a group (e.g. a truncated hash rank),
     * `tieCol` names a unique column that fixes the order among equals.
     * `driverCarryLimit` bounds the DRIVER-side carry-in: the per-(bucket,
-    * group) offsets are collected + broadcast only while they fit this many
-    * rows (the fast path — one probe collect, zero extra big-frame
-    * shuffles); past it the carry-in is equi-joined in distributed form,
-    * so group cardinality is unbounded at the price of one extra shuffle of
-    * the input.
+    * group) offsets are collected and broadcast only while they fit this
+    * many rows; past it they are left-joined onto the input instead, so
+    * group cardinality is unbounded at the price of one extra shuffle of
+    * the input and a second run of phase 1.
     */
   def groupedPrefixSum(df: DataFrame, groupCol: String, orderCol: String,
       valueCol: String, outCol: String = "ex_cum", numParts: Int = 0,
@@ -140,111 +140,74 @@ object Pack {
 
     // DRIVER-BOUNDED delivery (round 5): the offsets land on the driver only
     // while they fit `driverCarryLimit` rows. The probe collects limit+1
-    // rows; getting ≤ limit back proves it got ALL of them, so the fast
-    // broadcast-map path is exact. Past the limit (≳10⁶ (bucket, group)
-    // pairs — e.g. 10⁵ groups smeared over every bucket) the carry-in is
-    // joined in DISTRIBUTED form instead: one extra shuffle of the big frame
-    // keyed exactly like phase 2's repartition, zero driver materialization
-    // — the 100 TB shape for high-cardinality group columns.
-    // persisted around the probe so the over-limit path does not recompute
-    // phase 1 (the limit cannot push below the window) — as an RDD persist,
-    // NOT a DataFrame cache: the fast path unpersists immediately after the
-    // collect, but the join path's cache must outlive this call (the
-    // returned plan references it) and a CacheManager entry would then leak
-    // with no reachable unpersist point. An RDD persist is dropped by
-    // Spark's ContextCleaner as soon as the caller releases the returned
-    // plan — exactly the intended lifetime. Cost: one Row round-trip on the
-    // totals-sized frame, noise next to the pass it saves.
-    val offRdd = offsetsDf.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val offsets = spark.createDataFrame(offRdd, offsetsDf.schema)
-    val probe = offsets.limit(driverCarryLimit + 1).collect()
-    val sortCols = Seq(col("_pk_bucket"), col(groupCol), col(orderCol)) ++
-      tieCol.map(col)
-
-    if (probe.length <= driverCarryLimit) {
-      offRdd.unpersist(blocking = false)
+    // rows; getting ≤ limit back proves it got ALL of them, so the broadcast
+    // map is exact. Past the limit (≳10⁶ (bucket, group) cells — e.g. 10⁵
+    // groups smeared over every bucket) the carry-in is joined in
+    // DISTRIBUTED form instead: zero driver materialization, and phase 1
+    // runs again inside the final plan (the limit cannot push below the
+    // window, so the probe is no cheaper than that recompute).
+    val probe = offsetsDf.limit(driverCarryLimit + 1).collect()
+    val bucketed = df.withColumn("_pk_bucket", bucketExpr)
+    // carry-in offset of the (bucket, group) cell a row opens
+    val (input, carryIn) = if (probe.length <= driverCarryLimit) {
       probe.foreach { r =>
-        require(!r.isNullAt(0),
-          s"$orderCol must be non-null in prefix-sum input")
-        require(!r.isNullAt(2),
-          s"$valueCol must be non-null in prefix-sum input")
+        require(!r.isNullAt(0), s"$orderCol must be non-null in prefix-sum input")
+        require(!r.isNullAt(2), s"$valueCol must be non-null in prefix-sum input")
       }
       val bc = spark.sparkContext.broadcast(
         probe.map(r => ((r.getLong(0), normKey(r.get(1))), r.getLong(2))).toMap)
-
-      // phase 2: streaming pass, running sum reset at each (bucket, group)
-      // boundary to the broadcast carry-in
-      val parted = df.withColumn("_pk_bucket", bucketExpr)
-        .repartition(parts, col("_pk_bucket"))
-        .sortWithinPartitions(sortCols: _*)
-      val bi = parted.schema.fieldIndex("_pk_bucket")
-      val gi = parted.schema.fieldIndex(groupCol)
-      val vi = parted.schema.fieldIndex(valueCol)
-      val outSchema = parted.schema.add(outCol, LongType, nullable = false)
-      parted.mapPartitions { it =>
-        var curKey: (Long, Any) = null
-        var run = 0L
-        it.map { r =>
-          if (r.isNullAt(vi))
-            throw new IllegalArgumentException(s"null $valueCol in prefix-sum input")
-          val key = (r.getLong(bi), normKey(r.get(gi)))
-          if (curKey == null || key != curKey) {
-            curKey = key
-            run = bc.value.getOrElse(key, 0L)
-          }
-          val out = Row.fromSeq(r.toSeq :+ run)
-          run += r.getLong(vi)
-          out
-        }
-      }(Encoders.row(outSchema)).drop("_pk_bucket")
+      (bucketed, (_: Row, key: (Long, Any)) => bc.value.getOrElse(key, 0L))
     } else {
-      // distributed carry-in: equi-join the offsets onto the big frame on
-      // (bucket, group) — both jobs recompute the bucket as a pure function
-      // of the row, so the join key cannot disagree with the layout — then
-      // the same repartition + in-partition scan reads the offset from the
-      // row itself at each boundary. NULL-SAFE group equality (<=>): a null
-      // group key is a legal group in the broadcast path's (bucket, null)
-      // map key, and a plain === would silently miss it here — the two
-      // delivery paths must agree on every input
-      val parted = df.withColumn("_pk_bucket", bucketExpr)
-        .join(offsets,
+      // equi-join on (bucket, group) with NULL-SAFE group equality (<=>): a
+      // null group key is a legal group in the broadcast map's (bucket, null)
+      // key, and a plain === would silently miss it here — the two
+      // deliveries must agree on every input
+      val joined = bucketed
+        .join(offsetsDf,
           col("_pk_bucket") === col("_pk_b") && col(groupCol) <=> col("_pk_g"),
           "left")
         .drop("_pk_b", "_pk_g")
-        .repartition(parts, col("_pk_bucket"))
-        .sortWithinPartitions(sortCols: _*)
-      val bi = parted.schema.fieldIndex("_pk_bucket")
-      val gi = parted.schema.fieldIndex(groupCol)
-      val vi = parted.schema.fieldIndex(valueCol)
-      val oi = parted.schema.fieldIndex("_pk_off")
-      val outSchema = parted.schema.add(outCol, LongType, nullable = false)
-      parted.mapPartitions { it =>
-        var curKey: (Long, Any) = null
-        var run = 0L
-        it.map { r =>
-          if (r.isNullAt(vi))
-            throw new IllegalArgumentException(s"null $valueCol in prefix-sum input")
-          if (r.isNullAt(bi))
-            throw new IllegalArgumentException(s"null $orderCol in prefix-sum input")
-          val key = (r.getLong(bi), normKey(r.get(gi)))
-          if (curKey == null || key != curKey) {
-            curKey = key
-            // every (bucket, group) of the input exists in the offsets frame
-            // by construction — a missing/null carry-in is a join bug or a
-            // null $valueCol somewhere in the group, never a legitimate zero
-            if (r.isNullAt(oi))
-              throw new IllegalStateException(
-                s"prefix-sum carry-in missing or null for (bucket=${r.getLong(bi)}, " +
-                  s"$groupCol=${r.get(gi)}) — join miss or null $valueCol in the group")
-            run = r.getLong(oi)
-          }
-          val out = Row.fromSeq(r.toSeq :+ run)
-          run += r.getLong(vi)
-          out
-        }
-      }(Encoders.row(outSchema)).drop("_pk_bucket", "_pk_off")
+      val oi = joined.schema.fieldIndex("_pk_off")
+      (joined, (r: Row, key: (Long, Any)) => {
+        // every (bucket, group) of the input exists in the offsets frame by
+        // construction — a missing/null carry-in is a join bug or a null
+        // $valueCol somewhere in the group, never a legitimate zero
+        if (r.isNullAt(oi))
+          throw new IllegalStateException(
+            s"prefix-sum carry-in missing or null for (bucket=${key._1}, " +
+              s"$groupCol=${key._2}) — join miss or null $valueCol in the group")
+        r.getLong(oi)
+      })
     }
+
+    // phase 2: streaming pass, running sum reset at each (bucket, group)
+    // boundary to the cell's carry-in
+    val parted = input
+      .repartition(parts, col("_pk_bucket"))
+      .sortWithinPartitions((Seq(col("_pk_bucket"), col(groupCol), col(orderCol)) ++
+        tieCol.map(col)): _*)
+    val bi = parted.schema.fieldIndex("_pk_bucket")
+    val gi = parted.schema.fieldIndex(groupCol)
+    val vi = parted.schema.fieldIndex(valueCol)
+    val outSchema = parted.schema.add(outCol, LongType, nullable = false)
+    parted.mapPartitions { it =>
+      var curKey: (Long, Any) = null
+      var run = 0L
+      it.map { r =>
+        if (r.isNullAt(vi))
+          throw new IllegalArgumentException(s"null $valueCol in prefix-sum input")
+        if (r.isNullAt(bi))
+          throw new IllegalArgumentException(s"null $orderCol in prefix-sum input")
+        val key = (r.getLong(bi), normKey(r.get(gi)))
+        if (curKey == null || key != curKey) {
+          curKey = key
+          run = carryIn(r, key)
+        }
+        val out = Row.fromSeq(r.toSeq :+ run)
+        run += r.getLong(vi)
+        out
+      }
+    }(Encoders.row(outSchema)).drop("_pk_bucket", "_pk_off")
   }
 
   /** Concat-and-chunk packing census: documents (one row each, `nTokCol`

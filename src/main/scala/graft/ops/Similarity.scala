@@ -28,16 +28,6 @@ object Similarity {
         org.apache.spark.sql.GraftColumnBridge.expression(a),
         org.apache.spark.sql.GraftColumnBridge.expression(b)))
 
-  /** The interpreted higher-order-function form of [[dot]] — kept as the
-    * executable semantics REFERENCE: VectorExprsSpec pins the native
-    * expression bit-for-bit against this fold (same IEEE add order, same
-    * null/length behavior), which is what licenses the swap under the
-    * rounded-cosine oracles (q22/q51/q56).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
@@ -58,15 +48,6 @@ object Similarity {
       graft.expressions.VectorExprs.SignSig(
         org.apache.spark.sql.GraftColumnBridge.expression(emb),
         planes.map(_.toSeq).toSeq))
-
-  /** Interpreted per-plane composition of [[lshBucket]] — the executable
-    * semantics reference for VectorExprsSpec's signature-parity pin (null
-    * vectors and dim mismatches collapse to bucket 0 in both forms).
-    */
-  def lshBucketHof(emb: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(dotHof(emb, typedlit(p.toSeq)) > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
 
   /** Exact brute-force top-k by cosine against one query vector (embedding of
     * `queryId`). The query row is collapsed to a broadcast literal-free

@@ -365,12 +365,7 @@ object MoreQueries {
     * table.
     */
   def internalMetricsCensus(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_im").toString
-    // the lake must outlive this builder (the frame reads it back lazily),
-    // so it is removed when the JVM's Hadoop FileSystems close
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    basePath.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(basePath)
-    val lake = new LakeTable(s, base, "events_lake", "event_type")
+    val lake = new LakeTable(s, LakeTable.tempBase(s, "graft_im"), "events_lake", "event_type")
     lake.append(EventQueries.events(s, dir), "events->lake census")
     lake.internalMetrics()
       .select(col("table_name"), col("part"), col("n_rows"))

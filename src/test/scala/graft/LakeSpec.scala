@@ -12,7 +12,7 @@ import java.nio.file.Files
   */
 class LakeSpec extends AnyFunSuite with SparkSuite {
 
-  private def tmpDir(): String = Files.createTempDirectory("lake").toString
+  private def tmpDir(): String = tempDir("lake")
 
   private def obs(n: Long) =
     TokenFixture.deriveObs(TokenFixture.tokenTable(spark, n, withTokens = false))
@@ -78,7 +78,7 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     // the commit against a sequentially-measured 1000× (write + rename)
     // control on the same filesystem rather than an absolute wall, so a
     // slow-I/O window inflates both sides together.
-    val ctlDir = Files.createTempDirectory("lakectl")
+    val ctlDir = java.nio.file.Paths.get(tempDir("lakectl"))
     val c0 = System.nanoTime()
     (0 until 1000).foreach { i =>
       val f = ctlDir.resolve(s"c$i.tmp")

@@ -58,6 +58,9 @@ class PackSpec extends AnyFunSuite with SparkSuite {
     val w = Window.partitionBy("grp").orderBy("ord")
       .rowsBetween(Window.unboundedPreceding, -1)
     val want = df.withColumn("want", coalesce(sum(col("v")).over(w), lit(0L)))
+    // neither delivery may leave a persisted RDD behind (only additions
+    // count: Spark's ContextCleaner may drop an earlier suite's meanwhile)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val joined = Pack.groupedPrefixSum(df, "grp", "ord", "v", numParts = 8,
         driverCarryLimit = 1000)
       .join(want.select(col("grp"), col("ord"), col("want")), Seq("grp", "ord"))
@@ -68,6 +71,8 @@ class PackSpec extends AnyFunSuite with SparkSuite {
       .join(want.select(col("grp"), col("ord"), col("want")), Seq("grp", "ord"))
     assert(bcast.filter(col("ex_cum") =!= col("want")).count() == 0,
       "broadcast-path carry-in must match the window oracle")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
   }
 
   test("caller orderBounds (superset) gives identical results") {
@@ -195,7 +200,7 @@ class PackSpec extends AnyFunSuite with SparkSuite {
         tieCol = Some("doc_id"))
       .withColumn("pk", concat(col("source"), lit("_"), expr("seq_id div 4")))
 
-    val base = java.nio.file.Files.createTempDirectory("pack_lake").toString
+    val base = tempDir("pack_lake")
     val lake = new graft.lake.LakeTable(spark, base, "packed_32", "pk")
     val n1 = lake.append(packed, "pack run 1")
     assert(n1.nonEmpty)

@@ -1,8 +1,8 @@
 package graft
 
 import graft.compress.GorillaCodec
-import graft.model.{RollupPoint, Schemas}
-import graft.ref.RefRollup
+import graft.model.Schemas
+import graft.ref.{RefRollup, RollupPoint}
 import graft.sources.TokenFixture
 import graft.tiers.{TierCascade, TierRollup}
 import org.apache.spark.sql.DataFrame
@@ -126,7 +126,7 @@ class RollupSpec extends AnyFunSuite with SparkSuite {
     val ladder = Schemas.bucketLadder
     val obs = obsDf(20000, skewed = true)
     val pts = oracleObs(obs)
-    val base = java.nio.file.Files.createTempDirectory("cascade").toString
+    val base = tempDir("cascade")
     val tables = TierCascade.run(spark, obs, base, seriesBuckets = 4, salts = 1,
       withHistograms = true, withPages = true)
       .map(tr => tr.name -> tr.table.read().drop("pk")).toMap

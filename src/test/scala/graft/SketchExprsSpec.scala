@@ -2,13 +2,14 @@ package graft
 
 import graft.expressions.{SketchExprs, VectorExprs}
 import graft.ops.Dedup
+import graft.ref.RefExprs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parity pins for the native codegen'd sketch expressions
   * (graft_minhash_sig, graft_simhash) against the JVM-UDF reference forms
-  * they replaced (Dedup.minhashSignatureUdf / Dedup.simhashVotesUdf). The
+  * they replaced (RefExprs.minhashSignatureUdf / RefExprs.simhashVotesUdf). The
   * swap under the q27/q28 jaccard oracles and the q29 hamming pairs is
   * licensed ONLY by these tests: signatures must match element-for-element
   * in both codegen and interpreted evaluation modes — the 64-bit wrapping
@@ -48,7 +49,7 @@ class SketchExprsSpec extends AnyFunSuite with SparkSuite {
       withFactoryMode(mode) {
         val rows = df.select(
           Dedup.minhashSignatureFromHashes(col("hs"), numPerm).as("native"),
-          Dedup.minhashSignatureUdf(col("hs"), numPerm).as("udf")).collect()
+          RefExprs.minhashSignatureUdf(col("hs"), numPerm).as("udf")).collect()
         assert(rows.length == 300)
         rows.foreach { r =>
           assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"[$mode perms=$numPerm] $r")
@@ -79,7 +80,7 @@ class SketchExprsSpec extends AnyFunSuite with SparkSuite {
     val df = hashFrames(300)
     for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) withFactoryMode(mode) {
       val rows = df.select(
-        graft.ops.Dedup.simhashVotesUdf(col("hs")).as("udf"),
+        RefExprs.simhashVotesUdf(col("hs")).as("udf"),
         org.apache.spark.sql.GraftColumnBridge.column(
           SketchExprs.SimHashVotes(
             org.apache.spark.sql.GraftColumnBridge.expression(col("hs"))))
@@ -115,7 +116,7 @@ class SketchExprsSpec extends AnyFunSuite with SparkSuite {
     ).toDF("doc_id", "text")
     val rows = corpus.select(col("doc_id"),
       Dedup.simhash64(col("text")).as("native"),
-      Dedup.simhashVotesUdf(transform(split(col("text"), " "), w => xxhash64(w)))
+      RefExprs.simhashVotesUdf(transform(split(col("text"), " "), w => xxhash64(w)))
         .as("udf")).collect()
     rows.foreach(r => assert(r.getLong(1) == r.getLong(2), r.toString))
   }
@@ -173,7 +174,7 @@ class SketchExprsSpec extends AnyFunSuite with SparkSuite {
       withFactoryMode(mode) {
         val rows = df.select(
           Dedup.shingles(col("text"), k).as("native"),
-          Dedup.shinglesHof(col("text"), k).as("hof")).collect()
+          RefExprs.shinglesHof(col("text"), k).as("hof")).collect()
         rows.foreach { r =>
           assert(r.getSeq[String](0) == r.getSeq[String](1), s"[$mode k=$k] $r")
         }
@@ -185,7 +186,7 @@ class SketchExprsSpec extends AnyFunSuite with SparkSuite {
     for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) withFactoryMode(mode) {
       val rows = df.select(
         Dedup.shingleHashes(col("text")).as("native"),
-        Dedup.shingleHashesHof(col("text")).as("hof")).collect()
+        RefExprs.shingleHashesHof(col("text")).as("hof")).collect()
       rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"[$mode] $r"))
     }
   }
@@ -198,7 +199,7 @@ class SketchExprsSpec extends AnyFunSuite with SparkSuite {
           SketchExprs.SplitHashes(
             org.apache.spark.sql.GraftColumnBridge.expression(col("text"))))
           .as("native"),
-        Dedup.splitHashesHof(col("text")).as("hof")).collect()
+        RefExprs.splitHashesHof(col("text")).as("hof")).collect()
       rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"[$mode] $r"))
     }
   }
@@ -207,13 +208,13 @@ class SketchExprsSpec extends AnyFunSuite with SparkSuite {
     val df = spark.sql("SELECT cast(null as string) AS text")
     val r = df.select(
       Dedup.shingles(col("text")).as("ns"),
-      Dedup.shinglesHof(col("text")).as("hs"),
+      RefExprs.shinglesHof(col("text")).as("hs"),
       Dedup.shingleHashes(col("text")).as("nh"),
-      Dedup.shingleHashesHof(col("text")).as("hh"),
+      RefExprs.shingleHashesHof(col("text")).as("hh"),
       org.apache.spark.sql.GraftColumnBridge.column(
         SketchExprs.SplitHashes(
           org.apache.spark.sql.GraftColumnBridge.expression(col("text")))).as("nsp"),
-      Dedup.splitHashesHof(col("text")).as("hsp")).head()
+      RefExprs.splitHashesHof(col("text")).as("hsp")).head()
     assert(r.getSeq[String](0) == Seq("")) // HOF: otherwise-branch concat_ws -> ""
     assert(r.getSeq[String](0) == r.getSeq[String](1))
     assert(r.getSeq[Long](2) == r.getSeq[Long](3))

@@ -13,4 +13,7 @@ trait SparkSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** A fresh temp directory `prefix…`, removed at JVM exit. */
+  def tempDir(prefix: String): String = graft.lake.LakeTable.tempBase(spark, prefix)
 }

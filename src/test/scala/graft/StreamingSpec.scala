@@ -68,8 +68,8 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("stream_lake").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("stream_ckpt").toString
+    val base = tempDir("stream_lake")
+    val ckpt = tempDir("stream_ckpt")
     val lake = new graft.lake.LakeTable(spark, base, "stream_1m", "pk")
     val stream = MemoryStream[(String, Long, Long, Double)]
     val obs = stream.toDF().toDF("series", "ts", "seq", "value")

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.TagOps
 import graft.functions.TagOps._
+import graft.ref.RefExprs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -129,7 +130,7 @@ class TagOpsSpec extends AnyFunSuite with SparkSuite {
       try {
         val rows = df.select(col("id"),
           TagOps.canonicalTags(col("tags")).as("native"),
-          TagOps.canonicalTagsHof(col("tags")).as("hof")).orderBy("id").collect()
+          RefExprs.canonicalTagsHof(col("tags")).as("hof")).orderBy("id").collect()
         rows.foreach { r =>
           assert((r.isNullAt(1) && r.isNullAt(2)) ||
             r.getString(1) == r.getString(2), s"[$mode] $r")

@@ -2,6 +2,7 @@ package graft
 
 import graft.expressions.{GraftExtensions, VectorExprs}
 import graft.ops.Similarity
+import graft.ref.RefExprs
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,7 +54,7 @@ class VectorExprsSpec extends AnyFunSuite with SparkSuite {
     for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) withFactoryMode(mode) {
       val rows = joined.select(
         Similarity.dot(col("vec"), col("vec2")).as("native"),
-        Similarity.dotHof(col("vec"), col("vec2")).as("hof")).collect()
+        RefExprs.dotHof(col("vec"), col("vec2")).as("hof")).collect()
       assert(rows.length == 200)
       rows.foreach { r =>
         assert(bits(r.get(0)) == bits(r.get(1)), s"[$mode] $r")
@@ -70,7 +71,7 @@ class VectorExprsSpec extends AnyFunSuite with SparkSuite {
     ).toDF("id", "a", "b")
     val rows = df.select(col("id"),
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof"))
+      RefExprs.dotHof(col("a"), col("b")).as("hof"))
       .orderBy("id").collect()
     rows.foreach(r => assert(bits(r.get(1)) == bits(r.get(2)), r.toString))
     assert(rows(0).getDouble(1) == 0.0)
@@ -84,7 +85,7 @@ class VectorExprsSpec extends AnyFunSuite with SparkSuite {
         |  AS t(id, a, b)""".stripMargin)
     val nr = withNulls.select(col("id"),
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof")).orderBy("id").collect()
+      RefExprs.dotHof(col("a"), col("b")).as("hof")).orderBy("id").collect()
     nr.foreach { r =>
       assert(r.isNullAt(1) && r.isNullAt(2), s"null poisoning diverged: $r")
     }
@@ -96,7 +97,7 @@ class VectorExprsSpec extends AnyFunSuite with SparkSuite {
     val df = Seq((1L, Seq(2.0f, 4.0f, 1.0f))).toDF("id", "vec")
     val r = df.select(
       Similarity.dot(col("vec"), typedlit(planes.head)).as("native"),
-      Similarity.dotHof(col("vec"), typedlit(planes.head)).as("hof")).head()
+      RefExprs.dotHof(col("vec"), typedlit(planes.head)).as("hof")).head()
     assert(bits(r.get(0)) == bits(r.get(1)))
     assert(r.getDouble(0) == 2.0 * 0.5 + 4.0 * -0.25 + 1.0 * 2.0)
   }
@@ -109,7 +110,7 @@ class VectorExprsSpec extends AnyFunSuite with SparkSuite {
       for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) withFactoryMode(mode) {
         val rows = df.select(
           Similarity.lshBucket(col("vec"), planes).as("native"),
-          Similarity.lshBucketHof(col("vec"), planes).as("hof")).collect()
+          RefExprs.lshBucketHof(col("vec"), planes).as("hof")).collect()
         rows.foreach(r => assert(r.getLong(0) == r.getLong(1),
           s"[$mode nBits=$nBits dim=$dim] $r"))
       }
@@ -127,7 +128,7 @@ class VectorExprsSpec extends AnyFunSuite with SparkSuite {
         |  AS t(id, vec)""".stripMargin)
     val rows = df.select(col("id"),
       Similarity.lshBucket(col("vec"), planes).as("native"),
-      Similarity.lshBucketHof(col("vec"), planes).as("hof"))
+      RefExprs.lshBucketHof(col("vec"), planes).as("hof"))
       .orderBy("id").collect()
     rows.foreach { r =>
       assert(r.getLong(1) == r.getLong(2), s"parity: $r")

@@ -1,21 +1,43 @@
 package graft.ref
 
-import graft.model.RollupPoint
 import scala.collection.mutable
+
+/** The oracle's row (SURVEY.md §1 data model): one rolled-up (series,
+  * bucket) tier cell.
+  * It carries the vertex merge semantics result (sum/gauge-last) extended
+  * with min/max/count/last per the north rule (reference MetricValue has only
+  * sum/gauge/histogram/summary: vertex lib/event/src/metric/mod.rs:24-39;
+  * min/max/count/last extension per SURVEY.md §2.9). "Last" follows (ts, seq)
+  * event order instead of the reference's arrival order (MetricSet upsert
+  * replaces, vertex lib/framework/src/sink/buffer/metrics.rs:176-181),
+  * so results are deterministic under any partitioning. `lastTs`/`lastSeq`
+  * travel with the row so that coarser tiers (1m→1h→1d) can merge "last"
+  * correctly.
+  */
+final case class RollupPoint(
+    series: String,
+    bucket: Long, // bucket start, epoch seconds
+    sum: Double,
+    cnt: Long,
+    min: Double,
+    max: Double,
+    last: Double,
+    lastTs: Long,
+    lastSeq: Long)
 
 /** Single-node reference oracle: a direct Scala transcription of the
   * reference's aggregation semantics, used by ScalaTest to check the Spark
   * plans bit-for-bit (SURVEY.md §5 "Our translation").
   *
   * Semantics transcribed from:
-  *  - MetricValue::merge (/root/reference/lib/event/src/metric/mod.rs:42-64):
+  *  - MetricValue::merge (vertex lib/event/src/metric/mod.rs:42-64):
   *    Sum accumulates; Gauge is last-write-wins; Histogram increments count,
   *    sum, and every cumulative bucket with value <= upper; Summary merge is
   *    a no-op.
-  *  - metricalize grouped-merge (/root/reference/src/transforms/metricalize.rs:220-281):
+  *  - metricalize grouped-merge (vertex src/transforms/metricalize.rs:220-281):
   *    group by series identity, fold observations in order.
   *  - MetricNormalize absolute→delta
-  *    (/root/reference/lib/framework/src/sink/buffer/metrics.rs:99-141):
+  *    (vertex lib/framework/src/sink/buffer/metrics.rs:99-141):
   *    first observation yields None, subsequent yield the diff.
   *
   * Arrival order in the reference is stream order; here the canonical order is
