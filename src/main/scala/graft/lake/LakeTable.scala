@@ -2,7 +2,9 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets
 
 /** Iceberg-shaped lake layer over Parquet (SURVEY.md §7.4 — no Iceberg jar in
@@ -17,6 +19,9 @@ import java.nio.charset.StandardCharsets
   *  - resume: a rerun skips partitions whose manifest is committed and
   *    recomputes only the missing ones (torn uncommitted data dirs are wiped
   *    before rewrite, so the result is idempotent),
+  *  - a schema pinned at the first commit (`_schema.json`, written by the
+  *    same tmp + rename), so read() plans without a schema-inference job and
+  *    append() refuses a frame of another shape,
   *  - retention: partition-level expire deletes data + manifest
   *    (exporter TTL GC analog, /root/reference/src/sinks/prometheus_exporter.rs:457-482).
   *
@@ -26,6 +31,7 @@ import java.nio.charset.StandardCharsets
 final class LakeTable(spark: SparkSession, basePath: String, tier: String, partCol: String) {
   private val dataDir = s"$basePath/$tier/data"
   private val manifestDir = s"$basePath/$tier/_manifests"
+  private val schemaPath = new Path(s"$basePath/$tier/_schema.json")
   private def fs: FileSystem = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Driver-side parallel map over partition-granular FS work (rename /
@@ -59,10 +65,15 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
   /** Write `df` partitioned by `partCol`, skipping already-committed
     * partitions, and commit one manifest per newly written partition.
     * Returns the newly committed partition values. `df` must be
-    * deterministic for resume to be byte-stable.
+    * deterministic for resume to be byte-stable, and its field names and
+    * types (nullability aside) must be the table's pinned schema: a
+    * mismatch throws before anything is written.
     */
   def append(df: DataFrame, lineage: String): Seq[String] = {
     val appendStart = System.nanoTime()
+    val pinned = pinnedSchema()
+    require(pinned.forall(DataTypeUtils.equalsIgnoreNullability(_, df.schema)),
+      s"$tier's schema is pinned to ${pinned.get.simpleString}; refusing ${df.schema.simpleString}")
     val committed = committedPartitions()
     // Single pipeline pass: stage everything uncommitted, then promote staged
     // partition dirs by rename. (A distinct() pre-pass to discover partition
@@ -87,6 +98,9 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
       if (!fs.rename(d, dst)) throw new IllegalStateException(s"promote failed: $d -> $dst")
     }
     fs.delete(new Path(staging), true)
+    // pin the schema before the table's first manifest makes any row visible
+    if (pinned.isEmpty && committed.isEmpty)
+      atomicWrite(schemaPath, df.schema.json)
 
     // per-partition manifest: file census and row counts straight from the
     // parquet footers on the driver — a Spark job here would add a whole
@@ -124,13 +138,10 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
     * tmp manifests are dot-files and invisible to the reader).
     */
   def internalMetrics(): DataFrame =
-    spark.read.json(manifestDir)
+    spark.read.schema(LakeTable.ManifestSchema).json(manifestDir)
       .select(col("table").as("table_name"), col("partition").as("part"),
-        col("rows").cast("long").as("n_rows"),
-        col("bytes").cast("long").as("n_bytes"),
-        col("n_files").cast("long").as("n_files"),
-        col("wall_ms").cast("long").as("wall_ms"),
-        col("lineage"), col("committed_at"))
+        col("rows").as("n_rows"), col("bytes").as("n_bytes"), col("n_files"),
+        col("wall_ms"), col("lineage"), col("committed_at"))
 
   /** Resume filter as a broadcast LEFT ANTI join against the (small)
     * committed-partitions frame: at 10⁵ committed partitions an isin(...)
@@ -148,14 +159,30 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
         col(partCol).cast("string") === col("_committed_part"), "left_anti")
     }
 
-  private def commitManifest(partition: String, json: String): Unit = {
-    fs.mkdirs(new Path(manifestDir))
-    val tmp = new Path(s"$manifestDir/.$partition.json.tmp")
-    val dst = new Path(s"$manifestDir/$partition.json")
+  private def commitManifest(partition: String, json: String): Unit =
+    atomicWrite(new Path(s"$manifestDir/$partition.json"), json)
+
+  /** Write `text` to a dot-prefixed temp file beside `dst`, then rename it
+    * into place: readers see the old file or the whole new one, never a torn
+    * write. */
+  private def atomicWrite(dst: Path, text: String): Unit = {
+    fs.mkdirs(dst.getParent)
+    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
     if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) throw new IllegalStateException(s"manifest commit failed: $dst")
+    if (!fs.rename(tmp, dst)) throw new IllegalStateException(s"commit failed: $dst")
+  }
+
+  /** The schema pinned by the table's first commit; None for a table not yet
+    * committed, or one written before schemas were pinned. */
+  private def pinnedSchema(): Option[StructType] =
+    if (!fs.exists(schemaPath)) None
+    else Some(DataType.fromJson(readText(schemaPath)).asInstanceOf[StructType])
+
+  private def readText(p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
   /** Read only committed partitions (uncommitted/torn data is invisible) by
@@ -163,15 +190,19 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
     * O(committed dirs listed), with no giant In-predicate for the optimizer
     * to carry (a 10⁵-element isin was the round-1 planner cost) and no
     * listing of uncommitted siblings at all. basePath keeps the partition
-    * column in the schema.
+    * column in the schema. With a pinned schema no footer is read to plan
+    * the scan (schema inference is a Spark job per read), and a table with
+    * nothing committed reads as an empty frame of that schema.
     */
   def read(): DataFrame = {
     val committed = committedPartitions().toSeq.sorted
-    if (committed.isEmpty)
-      spark.read.option("basePath", dataDir).parquet(dataDir).filter(lit(false))
-    else
-      spark.read.option("basePath", dataDir)
-        .parquet(committed.map(p => s"$dataDir/$partCol=$p"): _*)
+    val unpinned = spark.read.option("basePath", dataDir)
+    // the partition column goes last, where partition discovery puts it, so
+    // an empty read has the same column order as a non-empty one
+    val reader = pinnedSchema().fold(unpinned)(s =>
+      unpinned.schema(StructType(s.filterNot(_.name == partCol) :+ s(partCol))))
+    if (committed.isEmpty) reader.parquet(dataDir).filter(lit(false))
+    else reader.parquet(committed.map(p => s"$dataDir/$partCol=$p"): _*)
   }
 
   /** Retention: drop partitions for which `expired` holds. Partition-predicate
@@ -190,21 +221,18 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
 
   def manifestJson(partition: String): Option[String] = {
     val p = new Path(s"$manifestDir/$partition.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(readText(p))
   }
 }
 
 object LakeTable {
+
+  /** The keys `append` writes into every manifest. */
+  private val ManifestSchema = new StructType()
+    .add("table", StringType).add("partition", StringType)
+    .add("rows", LongType).add("bytes", LongType).add("n_files", LongType)
+    .add("wall_ms", LongType).add("files", ArrayType(StringType))
+    .add("lineage", StringType).add("committed_at", StringType)
 
   /** A fresh local temp directory `prefix…` for a lake that must outlive the
     * code that builds it (frames read it back lazily), so it is deleted

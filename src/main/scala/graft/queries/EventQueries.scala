@@ -67,8 +67,8 @@ object EventQueries {
       .orderBy(col("bucket"), col("event_type"))
   }
 
-  /** Gap-fill over a 1-minute spine for day one (SURVEY §2.9): generated
-    * sequence spine × series, left join, LOCF fill of last_v.
+  /** Gap-fill over a 1-minute spine for day one (SURVEY §2.9): every
+    * missing minute between a series' cells, LOCF fill of last_v.
     */
   def gapfillLocf(s: SparkSession, dir: String): DataFrame = {
     val dayOne = obs(s, dir).filter(col("ts") < lit(1704067200L + 86400L))

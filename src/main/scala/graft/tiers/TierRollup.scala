@@ -106,26 +106,26 @@ object TierRollup {
     mergeTier(unpackOrd(salted), bucketSec)
   }
 
-  /** Gap-fill (SURVEY.md §2.9): generated time spine, left join the tier,
-    * then LOCF via last(ignoreNulls) over an ordered per-series window. The
-    * spine is generated with sequence()+explode — no driver-side loops.
-    *
-    * Default bounds are PER SERIES (each series spans its own [min, max]
-    * bucket range): with 10^9 sparse series over a year of 1-minute buckets, a
-    * global-bounds spine is ~5·10^14 rows regardless of data, while the
-    * per-series spine is proportional to the data's actual span — the
-    * round-1 scale defect.
+  /** Gap-fill (SURVEY.md §2.9) without a spine: one per-series window
+    * ordered by bucket carries the LOCF value (`last(last_v, ignoreNulls)`)
+    * and the next cell's bucket, and `posexplode(sequence(...))` expands each
+    * cell up to it. Position 0 is the cell itself; the rest are gaps (every
+    * tier column null, `last_v_filled` carried), within each series' own span.
     */
   def gapFill(tier: DataFrame, bucketSec: Long): DataFrame = {
-    val spine = tier.groupBy(col("series"))
-      .agg(min(col("bucket")).as("_lo"), max(col("bucket")).as("_hi"))
-      .select(col("series"),
-        explode(sequence(col("_lo"), col("_hi"), lit(bucketSec))).as("bucket"))
     val w = Window.partitionBy(col("series")).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine.join(tier, Seq("series", "bucket"), "left")
-      .withColumn("is_gap", col("cnt").isNull)
-      .withColumn("last_v_filled", last(col("last_v"), ignoreNulls = true).over(w))
+    val step = lit(bucketSec)
+    val cells = tier.select(col("*"),
+      last(col("last_v"), ignoreNulls = true)
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("_filled"),
+      lead(col("bucket"), 1).over(w).as("_next"))
+    val tierCols = tier.columns.filterNot(Set("series", "bucket"))
+    cells
+      .select(col("*"), posexplode(sequence(col("bucket"),
+        coalesce(col("_next") - step, col("bucket")), step)).as(Seq("_pos", "_b")))
+      .select(Seq(col("series"), col("_b").as("bucket")) ++
+        tierCols.map(c => when(col("_pos") === 0, col(c)).as(c)) ++
+        Seq((col("_pos") > 0).as("is_gap"), col("_filled").as("last_v_filled")): _*)
   }
 
   /** Absolute→delta/rate normalization

@@ -2,7 +2,8 @@ package graft
 
 import graft.lake.LakeTable
 import graft.sources.TokenFixture
-import graft.tiers.TierCascade
+import graft.tiers.{TierCascade, TierRollup}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -166,6 +167,83 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     assert(dropped == Seq(victim))
     assert(!lake.committedPartitions().contains(victim))
     assert(lake.read().filter(col("pk") === victim).count() == 0)
+    // expire everything: read() is an empty frame of the pinned schema
+    val schema = lake.read().schema
+    assert(lake.expire(_ => true).toSet == committed.toSet - victim)
+    val empty = lake.read()
+    assert(empty.schema == schema && empty.count() == 0)
+  }
+
+  /** Spark jobs started while `body` runs on this thread, counted by a
+    * listener on the job group; read once a later sentinel job's end event
+    * shows the listener bus has delivered every event before it. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val sentinelJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(g) if g == s"$group-sentinel" => sentinelJob.set(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob.get) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("read() plans from the schema pinned at the first commit, with no Spark job") {
+    val base = tmpDir()
+    val lake = new LakeTable(spark, base, "tier_1m", "pk")
+    val t1m = TierRollup.fromObs(obs(2000), 60L).withColumn("pk", TierCascade.partKey(4))
+    lake.append(t1m, "raw->1m")
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { df = lake.read(); df.queryExecution.analyzed } == 0)
+    assert(df.schema.map(f => f.name -> f.dataType) == t1m.schema.map(f => f.name -> f.dataType))
+    val rows = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    // a lake written before schemas were pinned has no _schema.json: read()
+    // infers the schema from the footers and sees the same rows
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/tier_1m/_schema.json"), false))
+    val inferred = lake.read()
+    assert(inferred.schema == df.schema)
+    assert(inferred.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq == rows)
+  }
+
+  test("append refuses a frame whose schema differs from the pinned one, before writing") {
+    val base = tmpDir()
+    val lake = new LakeTable(spark, base, "tier_1m", "pk")
+    val t1m = TierRollup.fromObs(obs(2000), 60L).withColumn("pk", TierCascade.partKey(4))
+    val committed = lake.append(t1m, "raw->1m")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def files(): Set[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(base), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
+    }
+    val before = files()
+    // new partition values, so only the guard stands between them and a commit
+    val renamed = t1m.withColumn("pk", concat(lit("new-"), col("pk")))
+    intercept[IllegalArgumentException](lake.append(renamed.withColumn("cnt", col("cnt").cast("int")), "int cnt"))
+    intercept[IllegalArgumentException](lake.append(renamed.drop("last_seq"), "fewer columns"))
+    intercept[IllegalArgumentException](lake.append(renamed.withColumnRenamed("sum_v", "total"), "renamed"))
+    assert(files() == before)
+    assert(lake.committedPartitions() == committed.toSet)
+    // nullability is not part of the guard: the lake's own all-nullable read
+    // appends (nothing new to commit)
+    assert(lake.read().schema != t1m.schema)
+    assert(lake.append(lake.read(), "reread").isEmpty)
   }
 
   test("internalMetrics: per-partition commit telemetry queryable as a DataFrame") {

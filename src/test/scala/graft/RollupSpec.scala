@@ -252,6 +252,44 @@ class RollupSpec extends AnyFunSuite with SparkSuite {
       filled.filter(col("is_gap")).count() > 0) // gaps exist and are marked
   }
 
+  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("gap-fill equals the spine-join reference as a multiset; its plan is one window, no join or aggregate") {
+    import spark.implicits._
+    val gapped = TierRollup.fromObs(TokenFixture.deriveObs(
+      TokenFixture.tokenTable(spark, 3000, withGaps = true, withTokens = false))
+      .select("series", "ts", "seq", "value"), 60L)
+    // edge cases: a single-bucket series, a cell whose last_v is null (its
+    // newest observation is null) inside a gapped run, and non-adjacent gaps
+    val edges = TierRollup.fromObs(Seq[(String, Long, Long, Option[Double])](
+      ("single", 600L, 1L, Some(4.0)),
+      ("nullv", 0L, 2L, Some(5.0)), ("nullv", 60L, 3L, Some(6.0)), ("nullv", 61L, 4L, None),
+      ("nullv", 240L, 5L, Some(7.0)),
+      ("apart", 0L, 6L, Some(1.0)), ("apart", 120L, 7L, Some(2.0)),
+      ("apart", 300L, 8L, Some(3.0)), ("apart", 360L, 9L, Some(4.0)))
+      .toDF("series", "ts", "seq", "value"), 60L)
+    for ((name, tier) <- Seq("gapped fixture" -> gapped, "edge cases" -> edges)) {
+      val got = TierRollup.gapFill(tier, 60L)
+      val want = RefRollup.gapFill(tier, 60L)
+      assert(got.schema == want.schema, name)
+      assert(multiset(got) == multiset(want), name)
+    }
+    val nullv = TierRollup.gapFill(edges, 60L).filter(col("series") === "nullv")
+      .orderBy("bucket").select("bucket", "is_gap", "last_v", "last_v_filled").collect()
+      .map(r => (r.getLong(0), r.getBoolean(1), Option(r.get(2)), r.getDouble(3))).toSeq
+    assert(nullv == Seq((0L, false, Some(5.0), 5.0), (60L, false, None, 5.0),
+      (120L, true, None, 5.0), (180L, true, None, 5.0), (240L, false, Some(7.0), 7.0)))
+    val local = spark.createDataFrame(java.util.Arrays.asList(edges.collect(): _*), edges.schema)
+    val plan = TierRollup.gapFill(local, 60L).queryExecution.optimizedPlan
+    val nodes = plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.nodeName
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a.nodeName
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w.nodeName
+    }
+    assert(nodes == Seq("Window"), s"gap-fill plan has $nodes, want one Window:\n$plan")
+  }
+
   test("token-array equality: derived obs preserve tokens vs the source table") {
     val tok = TokenFixture.tokenTable(spark, 2000)
     val derived = TokenFixture.deriveObs(tok)

@@ -1,5 +1,8 @@
 package graft.ref
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 /** The oracle's row (SURVEY.md §1 data model): one rolled-up (series,
@@ -42,7 +45,8 @@ final case class RollupPoint(
   *
   * Arrival order in the reference is stream order; here the canonical order is
   * (ts, seq) ascending, which the Spark side reproduces via max_by ordering.
-  * No Spark dependencies — pure Scala.
+  * Pure Scala, except [[gapFill]], which keeps the spine-join plan as the
+  * reference for TierRollup's.
   */
 object RefRollup {
 
@@ -144,5 +148,22 @@ object RefRollup {
         (ts, Some(delta), if (dt > 0) Some(delta / dt) else None)
       }
     }
+  }
+
+  /** Gap-fill the plain way (SURVEY.md §2.9): a per-series spine from an
+    * aggregate of each series' [min, max] bucket plus sequence()+explode,
+    * left-joined with the tier, then LOCF via last(ignoreNulls) over an
+    * ordered per-series window. Gaps are the spine rows no cell joined.
+    */
+  def gapFill(tier: DataFrame, bucketSec: Long): DataFrame = {
+    val spine = tier.groupBy(col("series"))
+      .agg(min(col("bucket")).as("_lo"), max(col("bucket")).as("_hi"))
+      .select(col("series"),
+        explode(sequence(col("_lo"), col("_hi"), lit(bucketSec))).as("bucket"))
+    val w = Window.partitionBy(col("series")).orderBy(col("bucket"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    spine.join(tier, Seq("series", "bucket"), "left")
+      .withColumn("is_gap", col("cnt").isNull)
+      .withColumn("last_v_filled", last(col("last_v"), ignoreNulls = true).over(w))
   }
 }
