@@ -78,26 +78,25 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
     // Single pipeline pass: stage everything uncommitted, then promote staged
     // partition dirs by rename. (A distinct() pre-pass to discover partition
     // values would run the whole upstream pipeline a second time.)
-    val stagingName = s"_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    val staging = s"$basePath/$tier/$stagingName"
-    val filtered = resumeFilter(df, committed)
-    filtered.write.mode("overwrite").partitionBy(partCol).parquet(staging)
-
-    val stagedDirs = fs.listStatus(new Path(staging)).iterator
-      .map(_.getPath).filter(_.getName.startsWith(s"$partCol=")).toSeq
-    val todo = stagedDirs.map(_.getName.stripPrefix(s"$partCol=")).sorted
-    if (todo.isEmpty) { fs.delete(new Path(staging), true); return Nil }
-
-    // promote: wipe torn target dirs, rename staged dirs into place —
-    // parallel across partitions (renames are copies on object stores; a
-    // serial loop over 10⁵ of them is a commit wall)
-    fs.mkdirs(new Path(dataDir))
-    parMap(stagedDirs) { d =>
-      val dst = new Path(s"$dataDir/${d.getName}")
-      if (fs.exists(dst)) fs.delete(dst, true)
-      if (!fs.rename(d, dst)) throw new IllegalStateException(s"promote failed: $d -> $dst")
-    }
-    fs.delete(new Path(staging), true)
+    val staging = new Path(s"$basePath/$tier/_staging_${java.util.UUID.randomUUID().toString.take(8)}")
+    // the staging dir is deleted whether the write, the promote or neither
+    // throws, so a failed append leaves nothing behind under the tier
+    val todo = try {
+      resumeFilter(df, committed).write.mode("overwrite").partitionBy(partCol).parquet(staging.toString)
+      val stagedDirs = fs.listStatus(staging).iterator
+        .map(_.getPath).filter(_.getName.startsWith(s"$partCol=")).toSeq
+      // promote: wipe torn target dirs, rename staged dirs into place —
+      // parallel across partitions (renames are copies on object stores; a
+      // serial loop over 10⁵ of them is a commit wall)
+      if (stagedDirs.nonEmpty) fs.mkdirs(new Path(dataDir))
+      parMap(stagedDirs) { d =>
+        val dst = new Path(s"$dataDir/${d.getName}")
+        if (fs.exists(dst)) fs.delete(dst, true)
+        if (!fs.rename(d, dst)) throw new IllegalStateException(s"promote failed: $d -> $dst")
+      }
+      stagedDirs.map(_.getName.stripPrefix(s"$partCol=")).sorted
+    } finally fs.delete(staging, true)
+    if (todo.isEmpty) return Nil
     // pin the schema before the table's first manifest makes any row visible
     if (pinned.isEmpty && committed.isEmpty)
       atomicWrite(schemaPath, df.schema.json)

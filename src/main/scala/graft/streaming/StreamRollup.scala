@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.tiers.TierRollup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,24 +17,19 @@ import org.apache.spark.sql.functions._
   */
 object StreamRollup {
 
-  /** Streaming 1-tier rollup: same aggregate set as TierRollup.fromObs.
-    * Append-mode compatible (watermark closes windows).
+  /** Streaming 1-tier rollup: observations enter as one-point tier cells and
+    * go through the batch tiers' one merge ([[graft.tiers.TierRollup]]), with
+    * the tumbling event-time window over `last_ts` as an extra key — so it
+    * plans as HashAggregate at every streaming aggregate level. Append-mode
+    * compatible (the watermark closes windows).
     */
-  def rollupStream(obs: DataFrame, bucketSec: Long, watermark: String = "10 minutes"): DataFrame =
-    obs
-      .withColumn("ts_ts", timestamp_seconds(col("ts")))
-      .withWatermark("ts_ts", watermark)
-      .groupBy(window(col("ts_ts"), s"$bucketSec seconds").as("w"), col("series"))
-      .agg(
-        sum(col("value")).as("sum_v"),
-        count(lit(1)).as("cnt"),
-        min(col("value")).as("min_v"),
-        max(col("value")).as("max_v"),
-        max_by(col("value"), struct(col("ts"), col("seq"))).as("last_v"),
-        max(struct(col("ts").as("ts"), col("seq").as("seq"))).as("_ord"))
-      .select(col("series"), unix_timestamp(col("w.start")).as("bucket"),
-        col("sum_v"), col("cnt"), col("min_v"), col("max_v"), col("last_v"),
-        col("_ord.ts").as("last_ts"), col("_ord.seq").as("last_seq"))
+  def rollupStream(obs: DataFrame, bucketSec: Long, watermark: String = "10 minutes"): DataFrame = {
+    val cells = TierRollup.cells(obs)
+      .withColumn("_ts", timestamp_seconds(col("last_ts")))
+      .withWatermark("_ts", watermark)
+    TierRollup.merge(cells, bucketSec, keys = Seq(window(col("_ts"), s"$bucketSec seconds").as("_w")))
+      .drop("_w")
+  }
 
   /** Streaming dedup (SURVEY §2.6 dedup transform): first occurrence per key
     * passes. State really IS bounded here: dropDuplicatesWithinWatermark

@@ -7,6 +7,14 @@ import org.apache.spark.sql.functions._
 /** Tiered continuous aggregates: raw observations → 1m → 1h → 1d rollup cells
   * (north_rule; semantics per SURVEY.md §1.2 / §2.3).
   *
+  * ONE rollup definition. vertex merges an incoming metric into a buffered
+  * aggregate by the same add rule it uses to combine two aggregates
+  * (MetricsBuffer/metricalize, SURVEY.md §1), so here a raw observation is a
+  * one-point tier cell — (series, bucket = ts, sum_v = min_v = max_v =
+  * last_v = value, cnt = 1, last_ts = ts, last_seq = seq) — and every
+  * sum-tier rollup (raw → 1m, salted, fused with histograms, finer → coarser
+  * tier, streaming) is the one [[merge]] of cells into coarser buckets.
+  *
   * Everything here is built-in Catalyst expressions — no UDFs, no custom
   * Aggregator — so the whole rollup stays inside whole-stage codegen and gets
   * map-side partial aggregation for free. "last" (vertex gauge last-write-wins,
@@ -23,88 +31,64 @@ import org.apache.spark.sql.functions._
   * Input observation frame: columns (series: string, ts: long epoch-sec,
   * seq: long unique tiebreak, value: double).
   * Tier frame: (series, bucket, sum_v, cnt, min_v, max_v, last_v, last_ts, last_seq).
+  * `cnt` is a sum of counts; a coalesce to 0 keeps it typed non-null, as
+  * every cell has at least one point.
   */
 object TierRollup {
 
   private val SeqBits = 46
   private val SeqMask = (1L << SeqBits) - 1
+  private val TierCols =
+    Seq("series", "bucket", "sum_v", "cnt", "min_v", "max_v", "last_v", "last_ts", "last_seq")
 
   def bucketOf(ts: Column, bucketSec: Long): Column =
     (floor(ts / bucketSec) * bucketSec).cast("long")
 
-  /** Strict total order on (ts, seq) within a bucket, packed into one long. */
-  private def packedOrd(ts: Column, seq: Column, bucket: Column): Column =
-    shiftleft(ts - bucket, SeqBits) + seq
+  /** Raw observations as one-point tier cells; `value` rides along for
+    * aggregates over the raw value (the histogram rungs). */
+  private[graft] def cells(obs: DataFrame): DataFrame =
+    obs.select(col("series"), col("ts").as("bucket"), col("value").as("sum_v"),
+      lit(1L).as("cnt"), col("value").as("min_v"), col("value").as("max_v"),
+      col("value").as("last_v"), col("ts").as("last_ts"), col("seq").as("last_seq"), col("value"))
 
-  private def rollupAggs(ts: Column, seq: Column, bucket: Column, value: Column) = {
-    val ord = packedOrd(ts, seq, bucket)
-    Seq(
-      sum(value).as("sum_v"),
-      count(lit(1)).as("cnt"),
-      min(value).as("min_v"),
-      max(value).as("max_v"),
-      max_by(value, ord).as("last_v"),
-      max(ord).as("_ord"))
-  }
-
-  /** `_ord` → (last_ts, last_seq); columns after the rollup set are kept. */
-  private def unpackOrd(df: DataFrame): DataFrame = {
-    val extras = df.columns.filterNot(Set("series", "bucket", "sum_v", "cnt",
-      "min_v", "max_v", "last_v", "_ord").contains)
-    df.select((Seq(col("series"), col("bucket"), col("sum_v"), col("cnt"), col("min_v"),
-      col("max_v"), col("last_v"),
-      (col("bucket") + shiftright(col("_ord"), SeqBits)).as("last_ts"),
-      col("_ord").bitwiseAND(SeqMask).as("last_seq")) ++ extras.map(col)): _*)
-  }
-
-  /** Raw observations → one tier. Shuffles once on (series, bucket) with
-    * map-side partial agg; all aggregates are algebraic and hash-friendly.
+  /** THE rollup: tier cells → `bucketSec` cells per (series, bucket, `keys`),
+    * plus `aggs`. One shuffle with map-side partials; every aggregate is
+    * algebraic and hash-friendly. "last" is the max of (last_ts, last_seq)
+    * packed against the coarser bucket. Columns after the tier set are the
+    * extra keys, then `aggs`.
     */
-  def fromObs(obs: DataFrame, bucketSec: Long): DataFrame = {
+  private[graft] def merge(cells: DataFrame, bucketSec: Long, keys: Seq[Column] = Nil,
+      aggs: Seq[Column] = Nil): DataFrame = {
     require(bucketSec <= 86400, s"bucketSec $bucketSec exceeds the packed-ord range")
-    val grouped = obs
-      .withColumn("bucket", bucketOf(col("ts"), bucketSec))
-      .groupBy(col("series"), col("bucket"))
-      .agg(rollupAggs(col("ts"), col("seq"), col("bucket"), col("value")).head,
-        rollupAggs(col("ts"), col("seq"), col("bucket"), col("value")).tail: _*)
-    unpackOrd(grouped)
-  }
-
-  /** Finer tier → coarser tier (1m→1h, 1h→1d). `last` merges correctly because
-    * each cell carries (last_ts, last_seq), re-packed against the coarser bucket.
-    */
-  def mergeTier(tier: DataFrame, bucketSec: Long): DataFrame = {
-    require(bucketSec <= 86400, s"bucketSec $bucketSec exceeds the packed-ord range")
-    val grouped = tier
+    val ord = shiftleft(col("last_ts") - col("_cb"), SeqBits) + col("last_seq")
+    val merged = cells
       .withColumn("_cb", bucketOf(col("bucket"), bucketSec))
-      .groupBy(col("series"), col("_cb").as("bucket"))
-      .agg(
-        sum(col("sum_v")).as("sum_v"),
-        sum(col("cnt")).as("cnt"),
-        min(col("min_v")).as("min_v"),
-        max(col("max_v")).as("max_v"),
-        max_by(col("last_v"), packedOrd(col("last_ts"), col("last_seq"), col("_cb"))).as("last_v"),
-        max(packedOrd(col("last_ts"), col("last_seq"), col("_cb"))).as("_ord"))
-    unpackOrd(grouped)
+      .groupBy(col("series") +: col("_cb").as("bucket") +: keys: _*)
+      .agg(sum(col("sum_v")).as("sum_v"), Seq(coalesce(sum(col("cnt")), lit(0L)).as("cnt"),
+        min(col("min_v")).as("min_v"), max(col("max_v")).as("max_v"),
+        max_by(col("last_v"), ord).as("last_v"), max(ord).as("_ord")) ++ aggs: _*)
+    val extras = merged.columns.filterNot((TierCols :+ "_ord").contains).map(col)
+    merged
+      .withColumn("last_ts", col("bucket") + shiftright(col("_ord"), SeqBits))
+      .withColumn("last_seq", col("_ord").bitwiseAND(SeqMask))
+      .select(TierCols.map(col) ++ extras: _*)
   }
+
+  /** Raw observations → one tier. */
+  def fromObs(obs: DataFrame, bucketSec: Long): DataFrame = merge(cells(obs), bucketSec)
+
+  /** Finer tier → coarser tier (1m→1h, 1h→1d). */
+  def mergeTier(tier: DataFrame, bucketSec: Long): DataFrame = merge(tier, bucketSec)
 
   /** Skew-safe two-phase rollup for hot series (north_rule "salted
-    * repartitioning for hot-key skew"; SURVEY.md §7.5.4): phase 1 aggregates
-    * (series, bucket, salt) — spreading one hot cell over `salts` reducers —
-    * phase 2 merges the salted partials with the exact tier-merge semantics.
-    * Deterministic: every aggregate is order-insensitive given the (ts, seq)
-    * ordering carried by max_by.
+    * repartitioning for hot-key skew"; SURVEY.md §7.5.4): phase 1 merges per
+    * (series, bucket, seq mod `salts`) — spreading one hot cell over `salts`
+    * reducers — and phase 2 merges the salted partials. Deterministic: every
+    * aggregate is order-insensitive given the packed (ts, seq) order.
     */
-  def fromObsSalted(obs: DataFrame, bucketSec: Long, salts: Int): DataFrame = {
-    require(bucketSec <= 86400, s"bucketSec $bucketSec exceeds the packed-ord range")
-    val salted = obs
-      .withColumn("bucket", bucketOf(col("ts"), bucketSec))
-      .withColumn("_salt", pmod(col("seq"), lit(salts.toLong)))
-      .groupBy(col("series"), col("bucket"), col("_salt"))
-      .agg(rollupAggs(col("ts"), col("seq"), col("bucket"), col("value")).head,
-        rollupAggs(col("ts"), col("seq"), col("bucket"), col("value")).tail: _*)
-    mergeTier(unpackOrd(salted), bucketSec)
-  }
+  def fromObsSalted(obs: DataFrame, bucketSec: Long, salts: Int): DataFrame =
+    mergeTier(merge(cells(obs), bucketSec,
+      keys = Seq(pmod(col("last_seq"), lit(salts.toLong)).as("_salt"))), bucketSec)
 
   /** Gap-fill (SURVEY.md §2.9) without a spine: one per-series window
     * ordered by bucket carries the LOCF value (`last(last_v, ignoreNulls)`)
@@ -145,45 +129,36 @@ object TierRollup {
       .withColumn("rate", col("delta") / (col("bucket") - prevB))
   }
 
-  /** Histogram tier from raw observations: cumulative Prometheus-style bucket
-    * counts (every bucket with value <= upper incremented;
-    * /root/reference/lib/event/src/metric/mod.rs:53-61), plus count and sum.
-    * One sum(when(..)) per ladder rung — fully codegen'd, one shuffle.
+  /** Cumulative Prometheus-style bucket counts of `value`: rung `b` counts
+    * every value <= b (vertex lib/event/src/metric/mod.rs:53-61).
+    * One sum(when(..)) per rung — algebraic and fully codegen'd.
     */
-  def histogramFromObs(obs: DataFrame, ladder: Array[Double], bucketSec: Long): DataFrame = {
-    val bucketCounts = ladder.map(b =>
-      sum(when(col("value") <= b, 1L).otherwise(0L)))
+  private def rungs(ladder: Array[Double], value: Column): Column =
+    array(ladder.toIndexedSeq.map(b => sum(when(value <= b, 1L).otherwise(0L))): _*)
+      .as("h_buckets")
+
+  /** Histogram tier from raw observations: the ladder's [[rungs]] plus count
+    * and sum, one shuffle.
+    */
+  def histogramFromObs(obs: DataFrame, ladder: Array[Double], bucketSec: Long): DataFrame =
     obs
       .groupBy(col("series"), bucketOf(col("ts"), bucketSec).as("bucket"))
-      .agg(count(lit(1)).as("h_count"), sum(col("value")).as("h_sum"),
-        array(bucketCounts: _*).as("h_buckets"))
-  }
+      .agg(count(lit(1)).as("h_count"), sum(col("value")).as("h_sum"), rungs(ladder, col("value")))
 
   /** Fused 1m stage: the sum-rollup aggregates AND the cumulative-bucket
     * histogram counts from ONE scan + ONE shuffle. The two tiers group by the
     * same (series, bucket) key, and the histogram's `h_count`/`h_sum` are
     * exactly the rollup's `cnt`/`sum_v`, so materializing them separately
     * (fromObs + histogramFromObs) costs a second full pass over the raw
-    * table for 11 extra rung sums. All aggregates stay algebraic /
-    * hash-friendly. Project the result with [[tierColumns]] /
+    * table for 11 extra rung sums. Project the result with [[tierColumns]] /
     * [[histColumns]] to recover the exact per-tier schemas.
     */
-  def fromObsWithHistogram(obs: DataFrame, ladder: Array[Double], bucketSec: Long): DataFrame = {
-    require(bucketSec <= 86400, s"bucketSec $bucketSec exceeds the packed-ord range")
-    val rungs = ladder.map(b => sum(when(col("value") <= b, 1L).otherwise(0L)))
-    val aggs = rollupAggs(col("ts"), col("seq"), col("bucket"), col("value")) :+
-      array(rungs.toIndexedSeq: _*).as("h_buckets")
-    unpackOrd(obs
-      .withColumn("bucket", bucketOf(col("ts"), bucketSec))
-      .groupBy(col("series"), col("bucket"))
-      .agg(aggs.head, aggs.tail: _*))
-  }
+  def fromObsWithHistogram(obs: DataFrame, ladder: Array[Double], bucketSec: Long): DataFrame =
+    merge(cells(obs), bucketSec, aggs = Seq(rungs(ladder, col("value"))))
 
   /** Sum-tier projection of [[fromObsWithHistogram]] — schema-identical to
     * [[fromObs]]. */
-  def tierColumns(fused: DataFrame): DataFrame =
-    fused.select(col("series"), col("bucket"), col("sum_v"), col("cnt"), col("min_v"),
-      col("max_v"), col("last_v"), col("last_ts"), col("last_seq"))
+  def tierColumns(fused: DataFrame): DataFrame = fused.select(TierCols.map(col): _*)
 
   /** Histogram-tier projection of [[fromObsWithHistogram]] — schema-identical
     * to [[histogramFromObs]] (`h_count`/`h_sum` are the rollup's cnt/sum_v). */
@@ -243,16 +218,5 @@ object TierRollup {
       when(c >= rank, lower + (lit(ladder(i)) - lower) * (rank - prevC) / (c - prevC))
     }
     when(countCol > 0, coalesce(branches :+ lit(ladder.last): _*))
-  }
-
-  /** Retention (exporter TTL GC analog,
-    * /root/reference/src/sinks/prometheus_exporter.rs:457-482): keep only
-    * cells within `ttlSec` of the high-water mark. In the lake layer this
-    * becomes a partition-predicate delete (LakeTable.expire); this is the
-    * dataframe form used in queries.
-    */
-  def retain(tier: DataFrame, ttlSec: Long): DataFrame = {
-    val hwm = tier.agg(max(col("bucket")).as("_hwm"))
-    tier.crossJoin(broadcast(hwm)).filter(col("bucket") > col("_hwm") - ttlSec).drop("_hwm")
   }
 }

@@ -246,6 +246,31 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     assert(lake.append(lake.read(), "reread").isEmpty)
   }
 
+  test("a failed append leaves no staging directory and changes no committed state") {
+    val base = tmpDir()
+    val lake = new LakeTable(spark, base, "tier_1m", "pk")
+    val t1m = TierRollup.fromObs(obs(2000), 60L).withColumn("pk", TierCascade.partKey(4))
+    val committed = lake.append(t1m, "raw->1m")
+    def rows() = lake.read().collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val before = rows()
+    // new partition values written by one task; one row's evaluation throws
+    // mid-write
+    val boom = t1m.agg(max(col("last_seq"))).head().getLong(0)
+    val failing = t1m.withColumn("pk", concat(lit("new-"), col("pk")))
+      .withColumn("sum_v", when(col("last_seq") === boom, raise_error(lit("boom")))
+        .otherwise(col("sum_v")))
+      .coalesce(1)
+    val e = intercept[Exception](lake.append(failing, "failing"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val left = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/tier_1m"))
+      .map(_.getPath.getName).filter(_.startsWith("_staging_"))
+    assert(left.isEmpty, s"staging left behind: ${left.mkString(", ")}")
+    assert(lake.committedPartitions() == committed.toSet)
+    assert(rows() == before)
+  }
+
   test("internalMetrics: per-partition commit telemetry queryable as a DataFrame") {
     import spark.implicits._
     val base = tmpDir()

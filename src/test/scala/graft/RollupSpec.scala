@@ -110,15 +110,23 @@ class RollupSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("fused 1m stage plan: ONE exchange, hash aggregation, no sort-based fallback") {
-    val fused = TierRollup.fromObsWithHistogram(obsDf(1000), Schemas.bucketLadder, 60L)
-    fused.count() // finalize the adaptive plan
-    val plan = fused.queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1,
-      s"expected exactly 1 shuffle:\n$plan")
-    assert(plan.contains("HashAggregate"), s"expected HashAggregate:\n$plan")
-    assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate")
-      && !plan.contains("\n+- Sort ") && !plan.contains(" Sort ["),
-      s"fused agg must stay hash-based and sort-free:\n$plan")
+    val obs = obsDf(1000)
+    // the 1m→1h merge reads a materialized 1m tier, as the cascade does
+    val t1m = s"${tempDir("tier")}/tier_1m"
+    TierRollup.fromObs(obs, 60L).write.parquet(t1m)
+    Seq("fromObsWithHistogram" -> TierRollup.fromObsWithHistogram(obs, Schemas.bucketLadder, 60L),
+      "fromObs" -> TierRollup.fromObs(obs, 60L),
+      "mergeTier 1m->1h" -> TierRollup.mergeTier(spark.read.parquet(t1m), 3600L)).foreach {
+      case (name, df) =>
+        df.count() // finalize the adaptive plan
+        val plan = df.queryExecution.executedPlan.toString
+        assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1,
+          s"$name: expected exactly 1 shuffle:\n$plan")
+        assert(plan.contains("HashAggregate"), s"$name: expected HashAggregate:\n$plan")
+        assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate")
+          && !plan.contains("\n+- Sort ") && !plan.contains(" Sort ["),
+          s"$name: agg must stay hash-based and sort-free:\n$plan")
+    }
   }
 
   test("default-shape cascade (fused 1m, histograms, pages): every committed " +
@@ -305,7 +313,7 @@ class RollupSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     val rows = (0 until 100).map(i => ("s", i * 60L, i.toLong, 1.0))
     val tier = TierRollup.fromObs(rows.toDF("series", "ts", "seq", "value"), 60L)
-    val kept = TierRollup.retain(tier, ttlSec = 600L)
+    val kept = RefRollup.retain(tier, ttlSec = 600L)
     assert(kept.count() == 10) // buckets within (hwm-600, hwm]
     assert(kept.agg(min("bucket")).head().getLong(0) == (99 * 60 - 600 + 60))
   }

@@ -2,7 +2,7 @@ package graft
 
 import graft.ref.RefRollup
 import graft.streaming.StreamRollup
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming rollup vs the single-node oracle: a MemoryStream drives the
@@ -26,7 +26,12 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .start()
     // three micro-batches in event-time order
     pts.grouped(200).foreach { batch => stream.addData(batch); q.processAllAvailable() }
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+      .executedPlan.toString
     q.stop()
+    assert(plan.contains("HashAggregate"), s"expected HashAggregate:\n$plan")
+    assert(!plan.contains("SortAggregate") && !plan.contains("ObjectHashAggregate"),
+      s"streaming rollup must stay hash-based:\n$plan")
 
     val got = spark.table("rollup_out")
       .select("series", "bucket", "sum_v", "cnt", "min_v", "max_v", "last_v", "last_ts", "last_seq")

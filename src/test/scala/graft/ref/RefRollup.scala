@@ -46,7 +46,7 @@ final case class RollupPoint(
   * Arrival order in the reference is stream order; here the canonical order is
   * (ts, seq) ascending, which the Spark side reproduces via max_by ordering.
   * Pure Scala, except [[gapFill]], which keeps the spine-join plan as the
-  * reference for TierRollup's.
+  * reference for TierRollup's, and [[retain]], the dataframe TTL filter.
   */
 object RefRollup {
 
@@ -165,5 +165,16 @@ object RefRollup {
     spine.join(tier, Seq("series", "bucket"), "left")
       .withColumn("is_gap", col("cnt").isNull)
       .withColumn("last_v_filled", last(col("last_v"), ignoreNulls = true).over(w))
+  }
+
+  /** Retention (exporter TTL GC analog,
+    * vertex src/sinks/prometheus_exporter.rs:457-482) as a dataframe
+    * filter: keep only cells within `ttlSec` of the high-water mark. The
+    * lake's retention is the partition-level `TierCascade.retention` +
+    * `LakeTable.expire`.
+    */
+  def retain(tier: DataFrame, ttlSec: Long): DataFrame = {
+    val hwm = tier.agg(max(col("bucket")).as("_hwm"))
+    tier.crossJoin(broadcast(hwm)).filter(col("bucket") > col("_hwm") - ttlSec).drop("_hwm")
   }
 }
