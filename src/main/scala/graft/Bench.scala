@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.JobGroupListener
 import graft.sources.TokenFixture
 import graft.tiers.TierCascade
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -517,8 +518,8 @@ object Bench {
     secs
   }
 
-  /** Per-shot shuffle-I/O attribution (round 5, after run Z3): a task-metrics
-    * listener whose deltas ride every timed shot's partial line as
+  /** Per-shot shuffle-I/O attribution (round 5, after run Z3): the shared
+    * listener's task-end deltas ride every timed shot's partial line as
     * `sh_w_mb` (shuffle bytes written), `sh_w_sec` (task-summed shuffle
     * write time) and `sh_fw_ms` (fetch wait). Z3 exposed a squall class no
     * synthetic control witnesses: asof/mz hi walls degraded 15→18 / 17→22 s
@@ -535,33 +536,33 @@ object Bench {
     * at calibration volume it cost 150 s per round). A real cluster's
     * shuffle lands on per-node disks that scale with executors.
     */
-  private final class IoListener extends org.apache.spark.scheduler.SparkListener {
-    val wNanos = new java.util.concurrent.atomic.AtomicLong
-    val wBytes = new java.util.concurrent.atomic.AtomicLong
-    val fetchMs = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        wNanos.addAndGet(m.shuffleWriteMetrics.writeTime)
-        wBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        fetchMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
-      }
-    }
-    /** (writeNanos, writeBytes, fetchWaitMs) — listener-bus events for a
-      * just-finished blocking action land within ms; the short sleep keeps
-      * the delta honest without private waitUntilEmpty APIs. */
-    def snap(): (Long, Long, Long) = {
-      Thread.sleep(150)
-      (wNanos.get, wBytes.get, fetchMs.get)
-    }
+  private def ioSnap(io: JobGroupListener): JobGroupListener.Counts = {
+    io.drain()
+    io.total
   }
 
   /** JSON fragment for one shot's shuffle-I/O delta. */
-  private def ioDelta(pre: (Long, Long, Long), post: (Long, Long, Long)): String = {
-    val mb = (post._2 - pre._2) / 1048576.0
-    val wSec = (post._1 - pre._1) / 1e9
-    val fwMs = post._3 - pre._3
+  private def ioDelta(pre: JobGroupListener.Counts, post: JobGroupListener.Counts): String = {
+    val mb = (post.shuffleWriteBytes - pre.shuffleWriteBytes) / 1048576.0
+    val wSec = (post.shuffleWriteNanos - pre.shuffleWriteNanos) / 1e9
+    val fwMs = post.fetchWaitMs - pre.fetchWaitMs
     f""""sh_w_mb":$mb%.1f,"sh_w_sec":$wSec%.2f,"sh_fw_ms":$fwMs"""
+  }
+
+  /** Seconds to build and execute one catalog leaf through the noop sink;
+    * a leaf whose noop write throws is re-run through `count()` inside the
+    * same timed region, and a failure of that too is swallowed, so a pass
+    * times every leaf and never aborts. The query pass and `BenchExtra time`
+    * both time leaves here.
+    */
+  private[graft] def timeLeaf(s: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Double = {
+    val q0 = System.nanoTime()
+    try { fn(s, sfDir).write.mode("overwrite").format("noop").save() }
+    catch { case _: Throwable =>
+      try fn(s, sfDir).count() catch { case _: Throwable => () }
+    }
+    (System.nanoTime() - q0) / 1e9
   }
 
   /** One level's measurements: -1.0 marks "not run this child". */
@@ -645,8 +646,7 @@ object Bench {
     // exposure — the 3-window A/B at the session builder)
     val s = session(cpus, aqe = false, codec = "zstd")
     // per-shot shuffle-I/O attribution riding every timed shot's partial
-    val io = new IoListener
-    s.sparkContext.addSparkListener(io)
+    val io = JobGroupListener.attach(s.sparkContext)
     try {
       val warmBase = Files.createTempDirectory("graft_warm").toString
       val warmObs = TokenFixture.deriveObs(
@@ -664,9 +664,9 @@ object Bench {
 
       var res = LevelResult(0L, -1.0, -1.0, -1.0, -1.0, -1.0)
       if (doCascade) {
-        val io0 = io.snap()
+        val io0 = ioSnap(io)
         val (n, c1) = cascade(s, rawPath)
-        val io1 = io.snap()
+        val io1 = ioSnap(io)
         res = res.copy(n = n, cascade = c1)
         partial(f"""{"level":$cpus,"phase":"cascade","shot":1,"sec":$c1%.2f,"rows":$n,${ioDelta(io0, io1)}}""")
         // grace: the shot-2 timed region is capped at c1 + grace — a shot 2
@@ -699,9 +699,9 @@ object Bench {
           // the round: shot 1 is already measured and banked — the OPTIONAL
           // extra shot degrades to "no improvement", it cannot subtract
           try {
-            val io2 = io.snap()
+            val io2 = ioSnap(io)
             val (_, out) = cascadeImpl(s, rawPath, timedCap = Some(best + grace))
-            val io3 = io.snap()
+            val io3 = ioSnap(io)
             out match {
               case Some(c2) =>
                 best = math.min(best, c2)
@@ -735,9 +735,9 @@ object Bench {
         // invocation left warm, so the marginal cost is ~the timed region.
         // A rerun failure degrades to "no improvement": shot 1 is banked.
         def shots(name: String, above: Double, run: () => Double): Double = {
-          val io0 = io.snap()
+          val io0 = ioSnap(io)
           val s1 = run()
-          val io1 = io.snap()
+          val io1 = ioSnap(io)
           partial(f"""{"level":$cpus,"phase":"$name","shot":1,"sec":$s1%.2f,${ioDelta(io0, io1)}}""")
           var best = s1
           // FAIL-CLOSED: the parent always sends the live remaining budget
@@ -746,9 +746,9 @@ object Bench {
           if (best > above && opsMaxWall > 0 &&
               elapsedSec + best + 15 < opsMaxWall) {
             try {
-              val io2 = io.snap()
+              val io2 = ioSnap(io)
               val s2 = run()
-              val io3 = io.snap()
+              val io3 = ioSnap(io)
               partial(f"""{"level":$cpus,"phase":"$name","shot":2,"sec":$s2%.2f,${ioDelta(io2, io3)}}""")
               best = math.min(best, s2)
             } catch { case e: Exception =>
@@ -916,12 +916,7 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         if (budget - elapsedSec < 25) { skippedQueries += 1; None }
         else {
-          val q0 = System.nanoTime()
-          try { fn(s, sfDir).write.mode("overwrite").format("noop").save() }
-          catch { case _: Throwable =>
-            try fn(s, sfDir).count() catch { case _: Throwable => () }
-          }
-          Some(name -> (System.nanoTime() - q0) / 1e9)
+          Some(name -> timeLeaf(s, sfDir, fn))
         }
       }
     } finally s.stop()

@@ -1,47 +1,33 @@
 package graft
 
-/** Round-6 optimization harness (guide §1: measure first; Bench.scala is
-  * frozen, so the extra measurements live here). Runs on the query pass's
-  * own session (`Bench.session`) with its noop-sink methodology, but over a
-  * selectable query subset with optional repeats and plan dumps, for fast
-  * iteration:
+import graft.obs.JobGroupListener
+
+/** The dev harness: the query pass's session (`Bench.session`) and timing
+  * (`Bench.timeLeaf`) over a selectable query subset, with repeats, result
+  * hashes and plan dumps, for fast iteration:
   *
   *   sbt "runMain graft.BenchExtra time q39,q64 3"   — time queries, N reps
   *   sbt "runMain graft.BenchExtra time all 2"       — whole pass, 2 reps
+  *   sbt "runMain graft.BenchExtra hash q02,q49"     — md5 of each result
   *   sbt "runMain graft.BenchExtra explain q39 plans/r06 before" — dump plans
   *
-  * Timing methodology is the frozen pass's: one full-width session
-  * (local[$SPARK_GRAFT_CPUS], AQE on, lz4, cpus*4 shuffle partitions, tmpfs
-  * local dir), each query materialized through the noop sink, wall measured
-  * around build+execute. Queries run in sorted-name order like the pass.
+  * The session is the pass's: local[$SPARK_GRAFT_CPUS], cpus*4 shuffle
+  * partitions, tmpfs local dir, AQE on and lz4 unless `SPARK_GRAFT_AQE` or
+  * `SPARK_GRAFT_CODEC` say otherwise; the data is `SPARK_GRAFT_SF_DIR`.
+  * `time` runs each query in sorted-name order like the pass, in a job group
+  * of its own, and after each `QTIME` line prints that group's stage report
+  * from the shared listener, read once the bus has drained: job and stage
+  * counts, the stage-wall sum and the eight slowest stages.
   */
 object BenchExtra {
 
-  /** Per-query job/stage attribution: counts + wall of every stage between
-    * resets, so a query's fixed cost decomposes into (#jobs, #stages,
-    * per-stage walls) — the §7.1 stage view without the UI.
-    */
-  private final class StageListener extends org.apache.spark.scheduler.SparkListener {
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double, Int)]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val i = sc.stageInfo
-      val wall = (for { s <- i.submissionTime; c <- i.completionTime }
-        yield (c - s) / 1e3).getOrElse(-1.0)
-      stages.add((i.stageId, i.name.takeWhile(_ != '\n').take(60), wall, i.numTasks))
-    }
-    def reset(): Unit = { stages.clear(); jobs.set(0) }
-    def report(): String = {
-      import scala.jdk.CollectionConverters._
-      val ss = stages.asScala.toSeq.sortBy(-_._3)
-      val total = ss.map(_._3).sum
-      val top = ss.take(8).map { case (id, n, w, t) =>
-        f"    stage $id%4d $w%6.2fs tasks=$t%-4d $n" }.mkString("\n")
-      f"  jobs=${jobs.get}%d stages=${ss.size}%d stageWallSum=$total%.2fs\n$top"
-    }
+  /** A leaf's fixed cost decomposed into (#jobs, #stages, per-stage walls)
+    * without the UI. */
+  private def stageReport(c: JobGroupListener.Counts): String = {
+    val ss = c.stages.sortBy(-_.wallSec)
+    val top = ss.take(8).map { st =>
+      f"    stage ${st.id}%4d ${st.wallSec}%6.2fs tasks=${st.tasks}%-4d ${st.name}" }
+    f"  jobs=${c.jobs}%d stages=${ss.size}%d stageWallSum=${ss.map(_.wallSec).sum}%.2fs\n${top.mkString("\n")}"
   }
 
   def main(args: Array[String]): Unit = {
@@ -60,18 +46,14 @@ object BenchExtra {
       mode match {
         case "time" =>
           val reps = if (args.length > 2) args(2).toInt else 1
-          val detail = sys.env.get("GRAFT_EXTRA_DETAIL").contains("1")
-          val listener = new StageListener
-          if (detail) s.sparkContext.addSparkListener(listener)
+          val listener = JobGroupListener.attach(s.sparkContext)
           for (r <- 1 to reps) {
             selected.foreach { case (name, fn) =>
-              s.sparkContext.setJobDescription(s"$name rep$r")
-              if (detail) listener.reset()
-              val t0 = System.nanoTime()
-              fn(s, sfDir).write.mode("overwrite").format("noop").save()
-              val sec = (System.nanoTime() - t0) / 1e9
+              val group = s"$name rep$r"
+              val sec = listener.inGroup(group)(Bench.timeLeaf(s, sfDir, fn))
               println(f"QTIME rep=$r $name%-28s $sec%8.3f s")
-              if (detail) { Thread.sleep(120); println(listener.report()) }
+              listener.drain()
+              println(stageReport(listener.group(group)))
               System.out.flush()
             }
           }

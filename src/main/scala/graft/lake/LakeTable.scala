@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -145,13 +146,16 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
   /** Resume filter as a broadcast LEFT ANTI join against the (small)
     * committed-partitions frame: at 10⁵ committed partitions an isin(...)
     * predicate is a 10⁵-element In the planner must carry and codegen; the
-    * anti join is one broadcast hash probe per row.
+    * anti join is one broadcast hash probe per row. `committed` holds
+    * directory names, which the writer escapes (`a:0` is committed as
+    * `a%3A0`), so they are unescaped before they meet the column's values.
     */
   private[graft] def resumeFilter(df: DataFrame, committed: Set[String]): DataFrame =
     if (committed.isEmpty) df
     else {
+      val values = committed.toSeq.map(ExternalCatalogUtils.unescapePathName).sorted
       val committedDf = spark.createDataFrame(
-        java.util.Arrays.asList(committed.toSeq.sorted.map(org.apache.spark.sql.Row(_)): _*),
+        java.util.Arrays.asList(values.map(org.apache.spark.sql.Row(_)): _*),
         new org.apache.spark.sql.types.StructType()
           .add("_committed_part", org.apache.spark.sql.types.StringType))
       df.join(broadcast(committedDf),

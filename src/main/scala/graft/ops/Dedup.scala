@@ -133,20 +133,6 @@ object Dedup {
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .agg(count(lit(1)).as("n_shared_bands"))
 
-  /** Candidate near-dup pairs via MinHash banding over (idCol, textCol).
-    * Returns (doc_a, doc_b, n_shared_bands). Buckets larger than `maxBucket`
-    * are EXCLUDED from pair generation (skew guard) — use
-    * [[minhashBuckets]] + [[droppedBuckets]] to observe what the guard cut.
-    */
-  def minhashCandidates(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      numPerm: Int = 64,
-      bands: Int = 16,
-      maxBucket: Int = 64): DataFrame =
-    candidatesFromBuckets(minhashBuckets(df, idCol, textCol, numPerm, bands), maxBucket)
-
   /** Exact n-gram Jaccard for pairs: |A∩B| / |A∪B| over distinct k-shingles. */
   def jaccard(shA: Column, shB: Column): Column =
     size(array_intersect(shA, shB)).cast("double") /

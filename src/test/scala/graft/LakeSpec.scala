@@ -1,9 +1,9 @@
 package graft
 
 import graft.lake.LakeTable
+import graft.obs.JobGroupListener
 import graft.sources.TokenFixture
 import graft.tiers.{TierCascade, TierRollup}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -120,6 +120,21 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     assert(filtered.agg(min(col("pk").cast("long"))).as[Long].head() == 10000L)
   }
 
+  test("resume skips committed partitions whose directory names Hadoop escapes") {
+    val base = tmpDir()
+    val lake = new LakeTable(spark, base, "escaped", "pk")
+    val df = spark.range(20).select(
+      concat(lit("a:"), (col("id") % 4).cast("string")).as("pk"), col("id").as("v"))
+    val committed = lake.append(df, "first")
+    assert(committed.size == 4)
+    def manifests() = committed.map(p => p -> lake.manifestJson(p)).toMap
+    val before = manifests()
+    assert(before.values.forall(_.isDefined))
+    assert(lake.append(df, "second").isEmpty)
+    assert(manifests() == before)
+    assert(lake.read().count() == 20)
+  }
+
   test("kill-and-rerun: missing manifests are recomputed, committed ones skipped") {
     val base = tmpDir()
     val lake = new LakeTable(spark, base, "tier_1m", "pk")
@@ -174,34 +189,16 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     assert(empty.schema == schema && empty.count() == 0)
   }
 
-  /** Spark jobs started while `body` runs on this thread, counted by a
-    * listener on the job group; read once a later sentinel job's end event
-    * shows the listener bus has delivered every event before it. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val sentinelJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val sc = spark.sparkContext
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(g) if g == s"$group-sentinel" => sentinelJob.set(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinelJob.get) drained.countDown()
-    }
-    sc.addSparkListener(listener)
+  /** Spark jobs started while `body` runs on this thread, counted by the
+    * shared listener in a job group of their own once the bus has drained. */
+  private def jobsStartedBy(body: => Unit): Long = {
+    val listener = JobGroupListener.attach(spark.sparkContext)
     try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-sentinel", "sentinel")
-      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
-      started.get
-    } finally sc.removeSparkListener(listener)
+      val group = s"jobs-${java.util.UUID.randomUUID()}"
+      listener.inGroup(group)(body)
+      listener.drain()
+      listener.group(group).jobs
+    } finally listener.detach()
   }
 
   test("read() plans from the schema pinned at the first commit, with no Spark job") {
